@@ -120,6 +120,28 @@ def probe_contaminated(
     return probe_flagged(rest, baseline_ms, ratio) if rest else True
 
 
+def probe_gate(
+    probes: list, baseline_ms: float, reps: int, spread_reran: bool,
+    ratio: float = PROBE_FLAG_RATIO,
+) -> tuple[bool, bool]:
+    """Probe-gate decision once a query's original batch (and any
+    spread re-run) has run: (tripped, fresh_batch).  ``tripped`` —
+    every original rep ran on a slowed host, so the query is recorded
+    in probe_reruns whichever gate supplies the fresh batch;
+    ``fresh_batch`` — run one fresh batch, unless the spread gate
+    already did.  Pure function for unit tests."""
+    tripped = probe_flagged(probes[:reps], baseline_ms, ratio)
+    return tripped, tripped and not spread_reran
+
+
+def median_sample(runs: list, reps: int, probe_tripped: bool) -> list:
+    """The reps the recorded median is taken over: the fresh batch
+    only when the original batch tripped the probe gate (every
+    original rep was host-slowed, so mixing them in would keep the
+    median host-inflated), else every rep.  Pure function."""
+    return runs[reps:] if probe_tripped and len(runs) > reps else runs
+
+
 def _vs_prev(timings: dict, sidecar: str) -> dict | None:
     """Common-subset total ratio vs the git-committed previous sidecar,
     computed and embedded by bench.py itself so the artifact and any
@@ -310,14 +332,16 @@ def main() -> None:
             spread_reruns[name] = [min(runs[:reps]), max(runs[:reps])]
         # probe gate (r11): EVERY rep of the original batch ran on a
         # slowed host, so even the median would be host-inflated — one
-        # fresh batch, the spread gate's discipline.  (A spread re-run
-        # already supplies the fresh batch; don't run a third.)
-        if probe_flagged(probes[:reps], probe_baseline) and len(runs) == reps:
+        # fresh batch, the spread gate's discipline (a spread re-run
+        # already supplies it), and the median over that batch only
+        tripped, fresh_batch = probe_gate(probes, probe_baseline, reps, reran)
+        if tripped:
             probe_reruns[name] = [min(probes[:reps]), max(probes[:reps])]
+        if fresh_batch:
             runs = runs + [run_once() for _ in range(reps)]
         # statistics.median averages the two middle elements for even
         # rep counts (ADVICE r3: upper-middle biased recorded timings up)
-        timings[name] = round(statistics.median(runs), 4)
+        timings[name] = round(statistics.median(median_sample(runs, reps, tripped)), 4)
         spread[name] = [min(runs), max(runs)]
         load_avg[name] = max(loads)
         cpu_probes[name] = [min(probes), max(probes)]

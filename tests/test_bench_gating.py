@@ -11,6 +11,7 @@ contaminated.
 from __future__ import annotations
 
 import importlib.util
+import statistics
 import sys
 from pathlib import Path
 
@@ -138,3 +139,27 @@ def test_probe_gate_unrerun_flag_stands():
     """No fresh batch recorded (defensive path): the original flag
     stands so a flagged query can never silently pass."""
     assert bench.probe_contaminated([36.0, 34.0, 40.0], 12.0, reps=3)
+
+
+def test_probe_gated_median_is_taken_over_the_fresh_batch_only():
+    """Every original rep ran on a slowed host: mixing those reps into
+    the median would keep it host-inflated even though the fresh batch
+    is clean."""
+    baseline, reps = 12.0, 3
+    probes = [36.0, 34.0, 40.0, 12.5, 11.8, 13.0]
+    runs = [9.0, 9.5, 10.0, 3.0, 3.1, 3.2]
+    tripped, fresh_batch = bench.probe_gate(probes[:reps], baseline, reps, False)
+    assert tripped and fresh_batch
+    assert statistics.median(bench.median_sample(runs, reps, tripped)) == 3.1
+    # an untripped query keeps the median over every rep
+    assert bench.median_sample(runs, reps, False) == runs
+
+
+def test_probe_rerun_recorded_when_the_spread_gate_already_reran():
+    """The spread gate supplied the fresh batch: no third batch runs,
+    but the query still counts as probe-tripped (probe_reruns)."""
+    baseline, reps = 12.0, 3
+    probes = [36.0, 34.0, 40.0, 12.5, 11.8, 13.0]
+    tripped, fresh_batch = bench.probe_gate(probes, baseline, reps, True)
+    assert tripped and not fresh_batch
+    assert not bench.probe_gate([12.1, 32.4, 12.6], baseline, reps, True)[0]

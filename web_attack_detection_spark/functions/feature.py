@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from web_attack_detection_spark.sqltext import sql_double
+
 # ---------------------------------------------------------------------------
 # R3 — dtype-driven column classification
 # ---------------------------------------------------------------------------
@@ -294,27 +296,22 @@ class FeaturePipelineModel:
         are now GENERATED AS SQL TEXT into two selectExpr calls + one
         conjunctive filter with exact withColumn semantics (replace in
         place, append in update order).  Every numeric literal embeds
-        as CAST('<repr>' AS DOUBLE), which string-parses correctly-
-        rounded and constant-folds to the same IEEE double F.lit()
-        embedded (the established plans/mlq.py _dlit equivalence), so
-        expression trees, filter conjunction, output schema, column
+        through ``sqltext.sql_double``, which constant-folds to the same
+        IEEE double F.lit() embedded, so expression trees, filter conjunction, output schema, column
         order — and therefore every output bit — are unchanged
         (plan diff in plans/r11; oracle sweeps green)."""
 
         def q(n: str) -> str:
             return "`" + n.replace("`", "``") + "`"
 
-        def dlit(x) -> str:
-            return "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{x!r}' AS DOUBLE)"
-
         def slit(s: str) -> str:
             return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
         def lookup_sql(col: str, mapping) -> str:
             if not mapping:
-                return "CAST(NULL AS DOUBLE)"
+                return sql_double(None)
             pairs = ", ".join(
-                f"{slit(k)}, {dlit(float(v))}" for k, v in mapping.items()
+                f"{slit(k)}, {sql_double(v)}" for k, v in mapping.items()
             )
             return f"element_at(map({pairs}), CAST({q(col)} AS STRING))"
 
@@ -330,7 +327,7 @@ class FeaturePipelineModel:
             return [f"{exprs[n]} AS {q(n)}" for n in names]
 
         imp = {
-            c: f"coalesce(CAST({q(c)} AS DOUBLE), {dlit(m)})"
+            c: f"coalesce(CAST({q(c)} AS DOUBLE), {sql_double(m)})"
             for c, m in self.means.items()
         }
         upd1 = list(imp.items())
@@ -338,7 +335,7 @@ class FeaturePipelineModel:
             # the scaler ran on the already-imputed column: inline it
             e = f"CAST({imp.get(c, q(c))} AS DOUBLE)"
             if std is not None and std > 0.0:
-                e = f"({e} / {dlit(std)})"
+                e = f"({e} / {sql_double(std)})"
             upd1.append((f"{c}_scaled", e))
         for c in self.categorical_cols:
             # literal-map lookup; unseen values → NULL idx → row dropped
@@ -358,7 +355,7 @@ class FeaturePipelineModel:
         for c in self.categorical_cols:
             width = self.cat_sizes[c] - 1  # apply_one_hot drop_last
             slots = ", ".join(
-                f"CASE WHEN {q(c + '_idx')} = {dlit(float(i))} THEN 1.0D ELSE 0.0D END"
+                f"CASE WHEN {q(c + '_idx')} = {sql_double(i)} THEN 1.0D ELSE 0.0D END"
                 for i in range(width)
             )
             upd2.append((f"{c}_vec", f"array({slots})"))

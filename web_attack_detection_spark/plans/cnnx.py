@@ -33,6 +33,12 @@ positions inside ONE per-row ROUND(...*1e6) quantization, order-free
 BIGINT sums, weight update one IEEE division + multiply-subtract,
 exp(-m) the only transcendental.
 
+Engine side: ``CNNX`` — the parameter table, ONE SQL-text forward
+fragment built from the current weights, and the max-pool/hard-tanh
+gradient layers — run by plans/exactx's shared loop.  Training
+rounds, the held-out confusion and plans/streamq
+stream_cnn_trained_scoring all apply that one fragment.
+
 Scale: per round ONE map-side scan feeding an 18-value aggregate —
 no shuffle in the loop, O(C) driver state; held-out confusion is one
 groupBy over the test split.
@@ -40,18 +46,20 @@ groupBy over the test split.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from web_attack_detection_spark.io.sources import load_table
-from web_attack_detection_spark.plans.mlq import (
-    STDZ_BASE_CTES,
-    _dlit,
-    _lrgd_round_half_away,
+from web_attack_detection_spark.plans.exactx import (
+    ExactArch,
+    exact_tidy,
+    fit_exact,
+    hardtanh_sql,
+    head_grads,
+    head_params,
+    margin_sql,
 )
+from web_attack_detection_spark.plans.mlq import STDZ_BASE_CTES
 from web_attack_detection_spark.plans.registry import register
+from web_attack_detection_spark.sqltext import sql_double
 
 _CNNX_C = 4  # conv channels
 _CNNX_P = 2  # output positions (3 inputs, kernel width 2, valid)
@@ -72,15 +80,7 @@ def _cnnx_init():
     return B, K0, K1, V
 
 
-def _cnnx_param_names() -> list:
-    C = _CNNX_C
-    names = [f"b{c}" for c in range(1, C + 1)]
-    names += [f"k0_{c}" for c in range(1, C + 1)]
-    names += [f"k1_{c}" for c in range(1, C + 1)]
-    return names + ["vb"] + [f"v{c}" for c in range(1, C + 1)]
-
-
-# --- shared textual builders (engine mirrors these forms exactly) ---------
+# --- DuckDB oracle builders ------------------------------------------------
 
 
 def _cnnx_pre_sql(t: int, c: int, wsrc: str) -> str:
@@ -270,215 +270,61 @@ def _cnnx_oracle() -> str:
     return "".join(parts)
 
 
-def _cnnx_train(
-    spark: SparkSession, sf_dir: str, _return_model: bool = False
-) -> DataFrame:
-    """Engine-side trainer: the Spark-dataflow mirror of the oracle.
-    Reference spec anchor: models/cnn_model.py:19-40 (Conv1D ->
-    MaxPooling1D -> Dense), main.py:138-151 (train/eval protocol)."""
-    C, P = _CNNX_C, _CNNX_P
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    base_all = events.select(
-        F.round(F.col("value") * 10000).cast("long").alias("x1q"),
-        (F.col("user_id") % 100).cast("long").alias("x2q"),
-        (F.col("event_id") % 100).cast("long").alias("x3q"),
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-        (F.col("event_id") % 4 == 1).cast("int").alias("istest"),
-    )
-    base = base_all.filter(F.col("istest") == 0)
-    s = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}q").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum((F.col(f"x{i}q") * F.col(f"x{i}q")).cast("decimal(38,0)")).alias(
-                f"s{i}{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    ).first()
-    n = int(s["n"])
-    mean, sd = {}, {}
-    for i in (1, 2, 3):
-        mean[i] = float(s[f"s{i}"]) / float(n)
-        q = float(s[f"s{i}{i}"]) / float(n)
-        sd[i] = math.sqrt(q - mean[i] * mean[i])
-
-    def _z(df: DataFrame) -> DataFrame:
-        return df.select(
-            "y",
-            *[
-                (
-                    (F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])
-                ).alias(f"z{i}")
-                for i in (1, 2, 3)
-            ],
-        )
-
-    zsrc = _z(base)
-    target = max(spark.sparkContext.defaultParallelism // 2, 1)
-    if zsrc.rdd.getNumPartitions() < target:
-        zsrc = zsrc.repartition(target)
-    z = zsrc.localCheckpoint()
+def _cnnx_params() -> list:
+    """(name, initial value, tidy address) per parameter: 'conv' rows
+    carry (bias, tap0, tap1) as pidx 0/1/2 per channel, then the 'out'
+    head."""
     B, K0, K1, V = _cnnx_init()
-    n6 = float(n) * 1000000.0
-    out: list = []
-
-    def _fwd(rel: DataFrame) -> DataFrame:
-        cur = rel.select(
-            "*",
-            *[
-                (
-                    F.lit(B[c - 1])
-                    + F.lit(K0[c - 1]) * F.col(f"z{t}")
-                    + F.lit(K1[c - 1]) * F.col(f"z{t + 1}")
-                ).alias(f"pre{t}_{c}")
-                for t in range(1, P + 1)
-                for c in range(1, C + 1)
-            ],
-        )
-        cur = cur.select(
-            "*",
-            *[
-                F.greatest(
-                    F.least(F.col(f"pre{t}_{c}"), F.lit(1.0)), F.lit(-1.0)
-                ).alias(f"a{t}_{c}")
-                for t in range(1, P + 1)
-                for c in range(1, C + 1)
-            ],
-        )
-        cur = cur.select(
-            "*",
-            *[
-                F.greatest(F.col(f"a1_{c}"), F.col(f"a2_{c}")).alias(f"p{c}")
-                for c in range(1, C + 1)
-            ],
-        )
-        m = F.lit(V[0])
-        for c in range(1, C + 1):
-            m = m + F.lit(V[c]) * F.col(f"p{c}")
-        return cur.select("*", m.alias("m"))
-
-    # Per-round gradient pass as ONE SQL string over a temp view of the
-    # checkpointed z (the ml_mlp_exact pattern — optimization guide
-    # §1.2 step 2 / §7.3): the Column-API build issued hundreds of
-    # py4j-backed expression constructions per round — serial driver
-    # latency at any scale.  Every CAST('<repr>' AS DOUBLE)
-    # constant-folds to the exact double F.lit() embedded, so the
-    # optimized plan — and every output bit — is unchanged.
-    import uuid as _uuid
-
-    zview = f"cnnx_z_{_uuid.uuid4().hex[:8]}"
-    z.createOrReplaceTempView(zview)
-
-    def _round_sql() -> str:
-        pres = ", ".join(
-            f"{_dlit(B[c - 1])} + {_dlit(K0[c - 1])} * z{t}"
-            f" + {_dlit(K1[c - 1])} * z{t + 1} AS pre{t}_{c}"
-            for t in range(1, P + 1)
-            for c in range(1, C + 1)
-        )
-        acts = ", ".join(
-            f"GREATEST(LEAST(pre{t}_{c}, 1.0D), -1.0D) AS a{t}_{c}"
-            for t in range(1, P + 1)
-            for c in range(1, C + 1)
-        )
-        pools = ", ".join(
-            f"GREATEST(a1_{c}, a2_{c}) AS p{c}" for c in range(1, C + 1)
-        )
-        m_expr = _dlit(V[0]) + "".join(
-            f" + {_dlit(V[c])} * p{c}" for c in range(1, C + 1)
-        )
-        dps = ", ".join(
-            f"resid * {_dlit(V[c])} AS dp_{c}" for c in range(1, C + 1)
-        )
-        ds = []
-        for c in range(1, C + 1):
-            ds.append(
-                f"CASE WHEN (a1_{c} >= a2_{c}) AND (ABS(pre1_{c}) < 1.0D)"
-                f" THEN dp_{c} ELSE 0.0D END AS d1_{c}"
-            )
-            ds.append(
-                f"CASE WHEN (a1_{c} < a2_{c}) AND (ABS(pre2_{c}) < 1.0D)"
-                f" THEN dp_{c} ELSE 0.0D END AS d2_{c}"
-            )
-        g_cols = ["SUM(CAST(ROUND(resid * 1000000.0D) AS BIGINT)) AS gvb"]
-        for c in range(1, C + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND(resid * p{c} * 1000000.0D) AS BIGINT)) AS gv{c}"
-            )
-        for c in range(1, C + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND((d1_{c} + d2_{c}) * 1000000.0D) AS BIGINT))"
-                f" AS gb{c}"
-            )
-        for c in range(1, C + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND((d1_{c} * z1 + d2_{c} * z2) * 1000000.0D)"
-                f" AS BIGINT)) AS gk0_{c}"
-            )
-        for c in range(1, C + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND((d1_{c} * z2 + d2_{c} * z3) * 1000000.0D)"
-                f" AS BIGINT)) AS gk1_{c}"
-            )
-        g_cols.append("SUM(CAST((m >= 0.0D) = (y = 1) AS BIGINT)) AS nc")
-        return (
-            f"SELECT {', '.join(g_cols)} FROM ("
-            f"SELECT *, {', '.join(ds)} FROM ("
-            f"SELECT *, {dps} FROM ("
-            "SELECT *, 1.0D / (1.0D + EXP(-m)) - CAST(y AS DOUBLE) AS resid"
-            " FROM ("
-            f"SELECT *, {m_expr} AS m FROM ("
-            f"SELECT *, {pools} FROM ("
-            f"SELECT *, {acts} FROM ("
-            f"SELECT y, z1, z2, z3, {pres} FROM {zview})))))))"
-        )
-
-    for r in range(1, _CNNX_ROUNDS + 1):
-        g = spark.sql(_round_sql()).first()
-        for c in range(1, C + 1):
-            B[c - 1] = B[c - 1] - _CNNX_LR * (float(g[f"gb{c}"]) / n6)
-            K0[c - 1] = K0[c - 1] - _CNNX_LR * (float(g[f"gk0_{c}"]) / n6)
-            K1[c - 1] = K1[c - 1] - _CNNX_LR * (float(g[f"gk1_{c}"]) / n6)
-        V[0] = V[0] - _CNNX_LR * (float(g["gvb"]) / n6)
-        for c in range(1, C + 1):
-            V[c] = V[c] - _CNNX_LR * (float(g[f"gv{c}"]) / n6)
-        for c in range(1, C + 1):
-            for pidx, w_now in enumerate((B[c - 1], K0[c - 1], K1[c - 1])):
-                gn = (f"gb{c}", f"gk0_{c}", f"gk1_{c}")[pidx]
-                out.append(
-                    (r, "conv", c, pidx, int(g[gn]),
-                     _lrgd_round_half_away(w_now * 1000000))
-                )
-        out.append((r, "out", 0, 0, int(g["gvb"]), _lrgd_round_half_away(V[0] * 1000000)))
-        for c in range(1, C + 1):
-            out.append(
-                (r, "out", 0, c, int(g[f"gv{c}"]), _lrgd_round_half_away(V[c] * 1000000))
-            )
-        out.append((r, "acc", 0, 0, int(g["nc"]), n))
-
-    spark.catalog.dropTempView(zview)
-    if _return_model:
-        # fitted weights + standardization stats for serving callers
-        # (plans/streamq.stream_cnn_trained_scoring) — bit-identical
-        # to the oracle's w_{ROUNDS} columns by trajectory mirroring
-        return {"B": B, "K0": K0, "K1": K1, "V": V, "mean": mean, "sd": sd, "n": n}
-
-    cm = (
-        _fwd(_z(base_all.filter(F.col("istest") == 1)))
-        .select("y", (F.col("m") >= F.lit(0.0)).cast("long").alias("pred"))
-        .groupBy("y", "pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .collect()
+    chans = range(1, _CNNX_C + 1)
+    return (
+        [(f"b{c}", B[c - 1], ("conv", c, 0)) for c in chans]
+        + [(f"k0_{c}", K0[c - 1], ("conv", c, 1)) for c in chans]
+        + [(f"k1_{c}", K1[c - 1], ("conv", c, 2)) for c in chans]
+        + head_params(V)
     )
-    for row in cm:
-        out.append(
-            (_CNNX_ROUNDS, "cm", int(row["y"]), int(row["pred"]), int(row["cnt"]), 0)
+
+
+def _cnnx_forward(w: dict) -> tuple:
+    """Shared-kernel conv pre-activations per position, hard-tanh,
+    max-pool over the positions, then the head margin."""
+    chans, pos, d = range(1, _CNNX_C + 1), range(1, _CNNX_P + 1), sql_double
+    pres = [
+        f"{d(w[f'b{c}'])} + {d(w[f'k0_{c}'])} * z{t}"
+        f" + {d(w[f'k1_{c}'])} * z{t + 1} AS pre{t}_{c}"
+        for t in pos
+        for c in chans
+    ]
+    acts = [f"{hardtanh_sql(f'pre{t}_{c}')} AS a{t}_{c}" for t in pos for c in chans]
+    pools = [f"GREATEST(a1_{c}, a2_{c}) AS p{c}" for c in chans]
+    return [pres, acts, pools], margin_sql(w, [f"p{c}" for c in chans])
+
+
+def _cnnx_gradient(w: dict) -> tuple:
+    """dP_c routes to the argmax position (a1 >= a2 -> position 1 — a
+    deterministic exact comparison), then the hard-tanh gate; each
+    kernel tap sums its contributions across positions."""
+    chans = range(1, _CNNX_C + 1)
+    dps = [f"resid * {sql_double(w[f'v{c}'])} AS dp_{c}" for c in chans]
+    ds = []
+    for c in chans:
+        ds.append(
+            f"CASE WHEN (a1_{c} >= a2_{c}) AND (ABS(pre1_{c}) < 1.0D)"
+            f" THEN dp_{c} ELSE 0.0D END AS d1_{c}"
         )
-    schema = "round long, layer string, unit long, pidx long, grad_q long, w_q long"
-    return spark.createDataFrame(out, schema).orderBy(
-        "round", "layer", "unit", "pidx"
-    )
+        ds.append(
+            f"CASE WHEN (a1_{c} < a2_{c}) AND (ABS(pre2_{c}) < 1.0D)"
+            f" THEN dp_{c} ELSE 0.0D END AS d2_{c}"
+        )
+    grads = head_grads([f"p{c}" for c in chans])
+    grads.update({f"b{c}": f"(d1_{c} + d2_{c})" for c in chans})
+    grads.update({f"k0_{c}": f"(d1_{c} * z1 + d2_{c} * z2)" for c in chans})
+    grads.update({f"k1_{c}": f"(d1_{c} * z2 + d2_{c} * z3)" for c in chans})
+    return [dps, ds], grads
+
+
+CNNX = ExactArch(
+    "cnnx", _CNNX_ROUNDS, _CNNX_LR, _cnnx_params, _cnnx_forward, _cnnx_gradient
+)
 
 
 @register(
@@ -489,10 +335,10 @@ def _cnnx_train(
     "oracle incl. held-out confusion",
 )
 def ml_cnn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See the module docstring and _cnnx_train: training of the
+    """See the module docstring: training of the
     reference's convolutional model class (models/cnn_model.py:19-40)
     under full value-level DuckDB replay — shared-kernel gradients,
     max-pool argmax routing, weights, per-round accuracy, and the
     held-out confusion all hash-match.  Completes the exact-trainer
     trio: Dense (r9), recurrent and conv (r10)."""
-    return _cnnx_train(spark, sf_dir)
+    return exact_tidy(spark, CNNX, fit_exact(spark, sf_dir, CNNX))

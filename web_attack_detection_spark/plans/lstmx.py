@@ -27,12 +27,18 @@ architecture rows-only):
 Backpropagation-through-time runs the full LSTM chain — dh -> do/dc,
 the cell-state carry dc_t += dc_{t+1} * f_{t+1}, gate deltas di/df/dg,
 and the recurrence transpose into dh_{t-1} — as chained projections
-with IDENTICAL left-associated expression text in the engine, the
+with the same left-associated expression order in the engine, the
 DuckDB replay, and the numpy twin.  t=1 omits the recurrence terms and
-the forget-gate path entirely (h_0 = c_0 = 0) on ALL sides — textual
-mirroring, not algebraic simplification.  Per-row gradient
+the forget-gate path entirely (h_0 = c_0 = 0) in all three — the same
+IEEE op sequence, not an algebraic simplification.  Per-row gradient
 contributions ROUND(...*1e6) sum order-free as BIGINT; weight update
 one IEEE division + multiply-subtract per parameter.
+
+Engine side: ``LSTMX`` — the parameter table, ONE SQL-text forward
+fragment built from the current weights, and the BPTT gradient
+layers — run by plans/exactx's shared loop.  Training rounds, the
+held-out confusion and plans/streamq stream_lstm_trained_scoring all
+apply that one fragment.
 
 Scale: per round ONE map-side scan feeding a 36-value aggregate — no
 shuffle inside the loop, O(4*H*(H+2)) driver state; the held-out
@@ -41,18 +47,20 @@ confusion is one groupBy over the test split.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from web_attack_detection_spark.io.sources import load_table
-from web_attack_detection_spark.plans.mlq import (
-    STDZ_BASE_CTES,
-    _dlit,
-    _lrgd_round_half_away,
+from web_attack_detection_spark.plans.exactx import (
+    ExactArch,
+    exact_tidy,
+    fit_exact,
+    hardtanh_sql,
+    head_grads,
+    head_params,
+    margin_sql,
 )
+from web_attack_detection_spark.plans.mlq import STDZ_BASE_CTES
 from web_attack_detection_spark.plans.registry import register
+from web_attack_detection_spark.sqltext import sql_double
 
 _LSTMX_H = 2  # LSTM units
 _LSTMX_T = 3  # timesteps
@@ -81,20 +89,6 @@ def _lstmx_init():
         ((j % 2) * 2 - 1) * (j + 1) / 16.0 for j in range(1, H + 1)
     ]
     return W, V
-
-
-def _lstmx_param_names() -> list:
-    """35 parameters in update order: per gate per unit (bias, input
-    weight, recurrences), then the head."""
-    H = _LSTMX_H
-    names = []
-    for gname in _GATES:
-        for j in range(1, H + 1):
-            names.append(f"b{gname}{j}")
-            names.append(f"u{gname}{j}")
-            for k in range(1, H + 1):
-                names.append(f"r{gname}{j}_{k}")
-    return names + ["vb"] + [f"v{j}" for j in range(1, H + 1)]
 
 
 def _lstmx_pre_sql(gname: str, t: int, j: int, wsrc: str) -> str:
@@ -395,352 +389,141 @@ def _lstmx_oracle() -> str:
     return "".join(parts)
 
 
-def _lstmx_train(
-    spark: SparkSession, sf_dir: str, _return_model: bool = False
-):
-    """Engine-side trainer: the Spark-dataflow mirror of the oracle.
-    Reference spec anchor: models/lstm_model.py:17-34 (LSTM class),
-    main.py:138-151 (train/eval protocol)."""
-    H, T = _LSTMX_H, _LSTMX_T
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    base_all = events.select(
-        F.round(F.col("value") * 10000).cast("long").alias("x1q"),
-        (F.col("user_id") % 100).cast("long").alias("x2q"),
-        (F.col("event_id") % 100).cast("long").alias("x3q"),
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-        (F.col("event_id") % 4 == 1).cast("int").alias("istest"),
-    )
-    base = base_all.filter(F.col("istest") == 0)
-    s = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}q").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum((F.col(f"x{i}q") * F.col(f"x{i}q")).cast("decimal(38,0)")).alias(
-                f"s{i}{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    ).first()
-    n = int(s["n"])
-    mean, sd = {}, {}
-    for i in (1, 2, 3):
-        mean[i] = float(s[f"s{i}"]) / float(n)
-        q = float(s[f"s{i}{i}"]) / float(n)
-        sd[i] = math.sqrt(q - mean[i] * mean[i])
-
-    def _z(df: DataFrame) -> DataFrame:
-        return df.select(
-            "y",
-            *[
-                (
-                    (F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])
-                ).alias(f"z{i}")
-                for i in (1, 2, 3)
-            ],
-        )
-
-    zsrc = _z(base)
-    target = max(spark.sparkContext.defaultParallelism // 2, 1)
-    if zsrc.rdd.getNumPartitions() < target:
-        zsrc = zsrc.repartition(target)
-    z = zsrc.localCheckpoint()
+def _lstmx_params() -> list:
+    """(name, initial value, tidy address) for the 35 parameters: per
+    gate (layer) and unit, pidx 0 = bias, 1 = input weight, 1+k =
+    recurrence k; then the 'out' head."""
     W, V = _lstmx_init()
-    n6 = float(n) * 1000000.0
-    out: list = []
+    units = range(1, _LSTMX_H + 1)
+    rows = []
+    for g in _GATES:
+        for j in units:
+            rows.append((f"b{g}{j}", W[g][j - 1][0], (g, j, 0)))
+            rows.append((f"u{g}{j}", W[g][j - 1][1], (g, j, 1)))
+            rows += [(f"r{g}{j}_{k}", W[g][j - 1][1 + k], (g, j, 1 + k)) for k in units]
+    return rows + head_params(V)
 
-    def _hsig_col(x):
-        return F.greatest(
-            F.least(F.lit(0.2) * x + F.lit(0.5), F.lit(1.0)), F.lit(0.0)
-        )
 
-    def _fwd(rel: DataFrame) -> DataFrame:
-        cur = rel
-        for t in range(1, T + 1):
-            pres = []
-            for g in _GATES:
-                for j in range(1, H + 1):
-                    e = F.lit(W[g][j - 1][0]) + F.lit(W[g][j - 1][1]) * F.col(
-                        f"z{t}"
-                    )
-                    if t > 1:
-                        for k in range(1, H + 1):
-                            e = e + F.lit(W[g][j - 1][1 + k]) * F.col(
-                                f"h{t - 1}_{k}"
-                            )
-                    pres.append(e.alias(f"pre{g}{t}_{j}"))
-            cur = cur.select("*", *pres)
-            acts = []
-            for j in range(1, H + 1):
-                acts.append(_hsig_col(F.col(f"prei{t}_{j}")).alias(f"gi{t}_{j}"))
-                acts.append(_hsig_col(F.col(f"pref{t}_{j}")).alias(f"gf{t}_{j}"))
-                acts.append(_hsig_col(F.col(f"preo{t}_{j}")).alias(f"go{t}_{j}"))
-                acts.append(
-                    F.greatest(
-                        F.least(F.col(f"preg{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"gg{t}_{j}")
-                )
-            cur = cur.select("*", *acts)
-            cells = []
-            for j in range(1, H + 1):
-                if t == 1:
-                    cells.append(
-                        (F.col(f"gi1_{j}") * F.col(f"gg1_{j}")).alias(f"c1_{j}")
-                    )
-                else:
-                    cells.append(
-                        (
-                            F.col(f"gf{t}_{j}") * F.col(f"c{t - 1}_{j}")
-                            + F.col(f"gi{t}_{j}") * F.col(f"gg{t}_{j}")
-                        ).alias(f"c{t}_{j}")
-                    )
-            cur = cur.select("*", *cells)
-            cur = cur.select(
-                "*",
-                *[
-                    F.greatest(
-                        F.least(F.col(f"c{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"th{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-            cur = cur.select(
-                "*",
-                *[
-                    (F.col(f"go{t}_{j}") * F.col(f"th{t}_{j}")).alias(f"h{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"h3_{j}")
-        return cur.select("*", m.alias("m"))
+def _hsig_d(x: str) -> str:
+    """Hard sigmoid in the engine's D-suffixed literal form."""
+    return f"GREATEST(LEAST(0.2D * {x} + 0.5D, 1.0D), 0.0D)"
 
-    # Per-round BPTT pass as ONE SQL string over a temp view of the
-    # checkpointed z (the ml_mlp_exact pattern — optimization guide
-    # §1.2 step 2 / §7.3): the Column-API build issued thousands of
-    # py4j-backed expression constructions per round — serial driver
-    # latency at any scale.  Every CAST('<repr>' AS DOUBLE)
-    # constant-folds to the exact double F.lit() embedded, so the
-    # optimized plan — and every output bit — is unchanged.
-    import uuid as _uuid
 
-    zview = f"lstmx_z_{_uuid.uuid4().hex[:8]}"
-    z.createOrReplaceTempView(zview)
-
-    def _round_sql() -> str:
-        layers = [f"SELECT y, z1, z2, z3 FROM {zview}"]
-
-        def _stack(cols: list) -> None:
-            layers.append(
-                "SELECT *, " + ", ".join(cols) + " FROM (" + layers[-1] + ")"
-            )
-
-        def _hsig_sql(x: str) -> str:
-            return f"GREATEST(LEAST(0.2D * {x} + 0.5D, 1.0D), 0.0D)"
-
-        for t in range(1, T + 1):
-            pres = []
-            for g in _GATES:
-                for j in range(1, H + 1):
-                    e = f"{_dlit(W[g][j - 1][0])} + {_dlit(W[g][j - 1][1])} * z{t}"
-                    if t > 1:
-                        for k in range(1, H + 1):
-                            e += f" + {_dlit(W[g][j - 1][1 + k])} * h{t - 1}_{k}"
-                    pres.append(f"{e} AS pre{g}{t}_{j}")
-            _stack(pres)
-            acts = []
-            for j in range(1, H + 1):
-                acts.append(f"{_hsig_sql(f'prei{t}_{j}')} AS gi{t}_{j}")
-                acts.append(f"{_hsig_sql(f'pref{t}_{j}')} AS gf{t}_{j}")
-                acts.append(f"{_hsig_sql(f'preo{t}_{j}')} AS go{t}_{j}")
-                acts.append(
-                    f"GREATEST(LEAST(preg{t}_{j}, 1.0D), -1.0D) AS gg{t}_{j}"
-                )
-            _stack(acts)
-            if t == 1:
-                _stack(
-                    [f"gi1_{j} * gg1_{j} AS c1_{j}" for j in range(1, H + 1)]
-                )
-            else:
-                _stack(
-                    [
-                        f"gf{t}_{j} * c{t - 1}_{j} + gi{t}_{j} * gg{t}_{j}"
-                        f" AS c{t}_{j}"
-                        for j in range(1, H + 1)
-                    ]
-                )
-            _stack(
-                [
-                    f"GREATEST(LEAST(c{t}_{j}, 1.0D), -1.0D) AS th{t}_{j}"
-                    for j in range(1, H + 1)
-                ]
-            )
-            _stack(
-                [
-                    f"go{t}_{j} * th{t}_{j} AS h{t}_{j}"
-                    for j in range(1, H + 1)
-                ]
-            )
-        m_expr = _dlit(V[0]) + "".join(
-            f" + {_dlit(V[j])} * h3_{j}" for j in range(1, H + 1)
-        )
-        _stack([f"{m_expr} AS m"])
-        _stack(["1.0D / (1.0D + EXP(-m)) - CAST(y AS DOUBLE) AS resid"])
-        _stack(
-            [
-                f"resid * {_dlit(V[j])} AS dh3_{j}"
-                for j in range(1, H + 1)
-            ]
-        )
-
-        def _gate_cols(t: int) -> list:
-            cols = []
-            for j in range(1, H + 1):
-                cols.append(
-                    f"CASE WHEN ABS(preo{t}_{j}) < 2.5D"
-                    f" THEN dh{t}_{j} * th{t}_{j} * 0.2D"
-                    f" ELSE 0.0D END AS dpo{t}_{j}"
-                )
-                base_dc = (
-                    f"CASE WHEN ABS(c{t}_{j}) < 1.0D"
-                    f" THEN dh{t}_{j} * go{t}_{j} ELSE 0.0D END"
-                )
-                if t < T:
-                    base_dc = f"({base_dc}) + dc{t + 1}_{j} * gf{t + 1}_{j}"
-                cols.append(f"{base_dc} AS dc{t}_{j}")
-            return cols
-
-        def _delta_cols(t: int) -> list:
-            cols = []
-            for j in range(1, H + 1):
-                cols.append(
-                    f"CASE WHEN ABS(prei{t}_{j}) < 2.5D"
-                    f" THEN dc{t}_{j} * gg{t}_{j} * 0.2D"
-                    f" ELSE 0.0D END AS dpi{t}_{j}"
-                )
+def _lstmx_forward(w: dict) -> tuple:
+    """Per timestep: the 4 gate pre-activations (t=1 omits the
+    recurrence — h_0 = 0), the gate activations, the cell state (t=1
+    omits the forget path — c_0 = 0), its clamp and the hidden state;
+    then the head margin over h3."""
+    units, d = range(1, _LSTMX_H + 1), sql_double
+    layers = []
+    for t in range(1, _LSTMX_T + 1):
+        pres = []
+        for g in _GATES:
+            for j in units:
+                e = f"{d(w[f'b{g}{j}'])} + {d(w[f'u{g}{j}'])} * z{t}"
                 if t > 1:
-                    cols.append(
-                        f"CASE WHEN ABS(pref{t}_{j}) < 2.5D"
-                        f" THEN dc{t}_{j} * c{t - 1}_{j} * 0.2D"
-                        f" ELSE 0.0D END AS dpf{t}_{j}"
+                    e += "".join(
+                        f" + {d(w[f'r{g}{j}_{k}'])} * h{t - 1}_{k}" for k in units
                     )
+                pres.append(f"{e} AS pre{g}{t}_{j}")
+        acts = []
+        for j in units:
+            acts += [f"{_hsig_d(f'pre{g}{t}_{j}')} AS g{g}{t}_{j}" for g in "ifo"]
+            acts.append(f"{hardtanh_sql(f'preg{t}_{j}')} AS gg{t}_{j}")
+        cells = [
+            (f"gf{t}_{j} * c{t - 1}_{j} + " if t > 1 else "")
+            + f"gi{t}_{j} * gg{t}_{j} AS c{t}_{j}"
+            for j in units
+        ]
+        layers += [
+            pres,
+            acts,
+            cells,
+            [f"{hardtanh_sql(f'c{t}_{j}')} AS th{t}_{j}" for j in units],
+            [f"go{t}_{j} * th{t}_{j} AS h{t}_{j}" for j in units],
+        ]
+    return layers, margin_sql(w, [f"h{_LSTMX_T}_{j}" for j in units])
+
+
+def _lstmx_gradient(w: dict) -> tuple:
+    """LSTM BPTT as chained projections: per timestep (3 -> 1) the
+    output-gate delta and the cell-state carry dc_t += dc_{t+1} *
+    f_{t+1}, the i/f/g gate deltas, then the recurrence transpose
+    into dh_{t-1} (fixed enumeration: units j asc, gates i, f, o, g)."""
+    units, T = range(1, _LSTMX_H + 1), _LSTMX_T
+
+    def gate_cols(t: int) -> list:
+        cols = []
+        for j in units:
+            cols.append(
+                f"CASE WHEN ABS(preo{t}_{j}) < 2.5D"
+                f" THEN dh{t}_{j} * th{t}_{j} * 0.2D"
+                f" ELSE 0.0D END AS dpo{t}_{j}"
+            )
+            dc = (
+                f"CASE WHEN ABS(c{t}_{j}) < 1.0D"
+                f" THEN dh{t}_{j} * go{t}_{j} ELSE 0.0D END"
+            )
+            if t < T:
+                dc = f"({dc}) + dc{t + 1}_{j} * gf{t + 1}_{j}"
+            cols.append(f"{dc} AS dc{t}_{j}")
+        return cols
+
+    def delta_cols(t: int) -> list:
+        cols = []
+        for j in units:
+            cols.append(
+                f"CASE WHEN ABS(prei{t}_{j}) < 2.5D"
+                f" THEN dc{t}_{j} * gg{t}_{j} * 0.2D"
+                f" ELSE 0.0D END AS dpi{t}_{j}"
+            )
+            if t > 1:
                 cols.append(
-                    f"CASE WHEN ABS(preg{t}_{j}) < 1.0D"
-                    f" THEN dc{t}_{j} * gi{t}_{j}"
-                    f" ELSE 0.0D END AS dpg{t}_{j}"
+                    f"CASE WHEN ABS(pref{t}_{j}) < 2.5D"
+                    f" THEN dc{t}_{j} * c{t - 1}_{j} * 0.2D"
+                    f" ELSE 0.0D END AS dpf{t}_{j}"
                 )
-            return cols
-
-        def _dh_cols(t: int) -> list:
-            cols = []
-            for k in range(1, H + 1):
-                terms = [
-                    f"{_dlit(W[g][j - 1][1 + k])} * dp{g}{t + 1}_{j}"
-                    for j in range(1, H + 1)
-                    for g in _GATES
-                ]
-                cols.append(f"{' + '.join(terms)} AS dh{t}_{k}")
-            return cols
-
-        _stack(_gate_cols(3))
-        _stack(_delta_cols(3))
-        _stack(_dh_cols(2))
-        _stack(_gate_cols(2))
-        _stack(_delta_cols(2))
-        _stack(_dh_cols(1))
-        _stack(_gate_cols(1))
-        _stack(_delta_cols(1))
-        g_cols = ["SUM(CAST(ROUND(resid * 1000000.0D) AS BIGINT)) AS gvb"]
-        for j in range(1, H + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND(resid * h3_{j} * 1000000.0D) AS BIGINT))"
-                f" AS gv{j}"
+            cols.append(
+                f"CASE WHEN ABS(preg{t}_{j}) < 1.0D"
+                f" THEN dc{t}_{j} * gi{t}_{j}"
+                f" ELSE 0.0D END AS dpg{t}_{j}"
             )
-        for g in _GATES:
-            ts = (2, 3) if g == "f" else (1, 2, 3)
-            for j in range(1, H + 1):
-                bsum = " + ".join(f"dp{g}{t}_{j}" for t in ts)
-                g_cols.append(
-                    f"SUM(CAST(ROUND(({bsum}) * 1000000.0D) AS BIGINT))"
-                    f" AS gb{g}{j}"
-                )
-                usum = " + ".join(f"dp{g}{t}_{j} * z{t}" for t in ts)
-                g_cols.append(
-                    f"SUM(CAST(ROUND(({usum}) * 1000000.0D) AS BIGINT))"
-                    f" AS gu{g}{j}"
-                )
-                for k in range(1, H + 1):
-                    rsum = " + ".join(
-                        f"dp{g}{t}_{j} * h{t - 1}_{k}" for t in (2, 3)
-                    )
-                    g_cols.append(
-                        f"SUM(CAST(ROUND(({rsum}) * 1000000.0D) AS BIGINT))"
-                        f" AS gr{g}{j}_{k}"
-                    )
-        g_cols.append("SUM(CAST((m >= 0.0D) = (y = 1) AS BIGINT)) AS nc")
-        return f"SELECT {', '.join(g_cols)} FROM ({layers[-1]})"
+        return cols
 
-    for r in range(1, _LSTMX_ROUNDS + 1):
-        gres = spark.sql(_round_sql()).first()
-        # weight updates + tidy rows
-        for g in _GATES:
-            for j in range(1, H + 1):
-                W[g][j - 1][0] = W[g][j - 1][0] - _LSTMX_LR * (
-                    float(gres[f"gb{g}{j}"]) / n6
-                )
-                W[g][j - 1][1] = W[g][j - 1][1] - _LSTMX_LR * (
-                    float(gres[f"gu{g}{j}"]) / n6
-                )
-                for k in range(1, H + 1):
-                    W[g][j - 1][1 + k] = W[g][j - 1][1 + k] - _LSTMX_LR * (
-                        float(gres[f"gr{g}{j}_{k}"]) / n6
-                    )
-        V[0] = V[0] - _LSTMX_LR * (float(gres["gvb"]) / n6)
-        for j in range(1, H + 1):
-            V[j] = V[j] - _LSTMX_LR * (float(gres[f"gv{j}"]) / n6)
-        for g in _GATES:
-            for j in range(1, H + 1):
-                out.append(
-                    (r, g, j, 0, int(gres[f"gb{g}{j}"]),
-                     _lrgd_round_half_away(W[g][j - 1][0] * 1000000))
-                )
-                out.append(
-                    (r, g, j, 1, int(gres[f"gu{g}{j}"]),
-                     _lrgd_round_half_away(W[g][j - 1][1] * 1000000))
-                )
-                for k in range(1, H + 1):
-                    out.append(
-                        (r, g, j, 1 + k, int(gres[f"gr{g}{j}_{k}"]),
-                         _lrgd_round_half_away(W[g][j - 1][1 + k] * 1000000))
-                    )
-        out.append((r, "out", 0, 0, int(gres["gvb"]),
-                    _lrgd_round_half_away(V[0] * 1000000)))
-        for j in range(1, H + 1):
-            out.append(
-                (r, "out", 0, j, int(gres[f"gv{j}"]),
-                 _lrgd_round_half_away(V[j] * 1000000))
+    def dh_cols(t: int) -> list:
+        return [
+            " + ".join(
+                f"{sql_double(w[f'r{g}{j}_{k}'])} * dp{g}{t + 1}_{j}"
+                for j in units
+                for g in _GATES
             )
-        out.append((r, "acc", 0, 0, int(gres["nc"]), n))
+            + f" AS dh{t}_{k}"
+            for k in units
+        ]
 
-    spark.catalog.dropTempView(zview)
-    if _return_model:
-        return {"W": W, "V": V, "mean": mean, "sd": sd, "n": n}
+    layers = [[f"resid * {sql_double(w[f'v{j}'])} AS dh3_{j}" for j in units]]
+    for t in range(T, 0, -1):
+        if t < T:
+            layers.append(dh_cols(t))
+        layers += [gate_cols(t), delta_cols(t)]
+    grads = head_grads([f"h3_{j}" for j in units])
+    for g in _GATES:
+        ts = (2, 3) if g == "f" else (1, 2, 3)
+        for j in units:
+            grads[f"b{g}{j}"] = "(" + " + ".join(f"dp{g}{t}_{j}" for t in ts) + ")"
+            grads[f"u{g}{j}"] = (
+                "(" + " + ".join(f"dp{g}{t}_{j} * z{t}" for t in ts) + ")"
+            )
+            for k in units:
+                grads[f"r{g}{j}_{k}"] = (
+                    "(" + " + ".join(f"dp{g}{t}_{j} * h{t - 1}_{k}" for t in (2, 3)) + ")"
+                )
+    return layers, grads
 
-    cm = (
-        _fwd(_z(base_all.filter(F.col("istest") == 1)))
-        .select("y", (F.col("m") >= F.lit(0.0)).cast("long").alias("pred"))
-        .groupBy("y", "pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .collect()
-    )
-    for row in cm:
-        out.append(
-            (_LSTMX_ROUNDS, "cm", int(row["y"]), int(row["pred"]), int(row["cnt"]), 0)
-        )
-    schema = "round long, layer string, unit long, pidx long, grad_q long, w_q long"
-    return spark.createDataFrame(out, schema).orderBy(
-        "round", "layer", "unit", "pidx"
-    )
+
+LSTMX = ExactArch(
+    "lstmx", _LSTMX_ROUNDS, _LSTMX_LR, _lstmx_params, _lstmx_forward, _lstmx_gradient
+)
 
 
 @register(
@@ -751,10 +534,10 @@ def _lstmx_train(
     "oracle incl. held-out confusion",
 )
 def ml_lstm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See the module docstring and _lstmx_train: training of the
+    """See the module docstring: training of the
     reference's LSTM model class (models/lstm_model.py:17-34) under
     full value-level DuckDB replay — gate deltas, the cell-state
     carry, weights, per-round accuracy, and the held-out confusion
     all hash-match.  Completes the exact-trainer program over all
     FOUR reference model families."""
-    return _lstmx_train(spark, sf_dir)
+    return exact_tidy(spark, LSTMX, fit_exact(spark, sf_dir, LSTMX))

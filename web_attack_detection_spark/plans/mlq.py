@@ -5,6 +5,8 @@ trained weights aren't SQL-expressible, SURVEY.md §5 item 2)."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -16,7 +18,20 @@ from web_attack_detection_spark.ml.pipeline import (
     per_class_metrics,
     predict,
 )
+from web_attack_detection_spark.plans.exactx import (
+    ExactArch,
+    _lrgd_round_half_away,
+    checkpoint_train_z,
+    exact_tidy,
+    fit_exact,
+    fit_stdz,
+    hardtanh_sql,
+    head_grads,
+    head_params,
+    margin_sql,
+)
 from web_attack_detection_spark.plans.registry import register
+from web_attack_detection_spark.sqltext import sql_double
 
 # ---------------------------------------------------------------------------
 # per-class precision/recall/F1 — SQL-expressible, oracle-checked
@@ -431,7 +446,7 @@ def ml_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.createOrReplaceTempView(qview)
 
     def _dist_sql(center: list[float]) -> str:
-        arr = ", ".join(_dlit(c) for c in center)
+        arr = ", ".join(sql_double(c) for c in center)
         return (
             "aggregate(zip_with(transform(v, x -> CAST(x AS DOUBLE)), "
             f"array({arr}), (a, b) -> (a - b) * (a - b)), "
@@ -540,14 +555,6 @@ def _majority_baseline(train_df, test_df, label_col: str = "event_type") -> floa
 # shared literal-for-literal between the engine and the generated oracle
 _LRGD_ROUNDS = 8
 _LRGD_LR = 0.5  # textual literal "0.5" in the SQL below
-
-
-def _lrgd_round_half_away(x: float) -> int:
-    """Spark F.round (HALF_UP) == DuckDB ROUND for doubles: half away
-    from zero — what the driver-side weight quantization must match."""
-    import math
-
-    return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
 
 
 def _lrgd_oracle() -> str:
@@ -675,48 +682,10 @@ def ml_logreg_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from web_attack_detection_spark.ml.pipeline import to_vector
 
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    train = events.filter(F.col("event_id") % 4 != 1)
-    base = train.select(
-        F.round(F.col("value") * 10000).cast("long").alias("x1q"),
-        (F.col("user_id") % 100).cast("long").alias("x2q"),
-        (F.col("event_id") % 100).cast("long").alias("x3q"),
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-    )
-    s = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}q").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum((F.col(f"x{i}q") * F.col(f"x{i}q")).cast("decimal(38,0)")).alias(
-                f"s{i}{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    ).first()
-    n = int(s["n"])
-    import math
-
-    mean, sd = {}, {}
-    for i in (1, 2, 3):
-        mean[i] = float(s[f"s{i}"]) / float(n)
-        q = float(s[f"s{i}{i}"]) / float(n)
-        sd[i] = math.sqrt(q - mean[i] * mean[i])
-    zsrc = base.select(
-        "y",
-        *[
-            ((F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                f"z{i}"
-            )
-        for i in (1, 2, 3)
-        ],
-    )
-    # flagship-style boost: the one-row-group fixture would otherwise
-    # run every round's aggregate single-threaded (order-free BIGINT
-    # sums — the repartition cannot change a bit)
-    target = max(spark.sparkContext.defaultParallelism // 2, 1)
-    if zsrc.rdd.getNumPartitions() < target:
-        zsrc = zsrc.repartition(target)
-    z = zsrc.localCheckpoint()  # one materialization reused by all rounds + the audit
+    stdz = fit_stdz(spark, sf_dir)
+    n = stdz.n
+    # one materialization reused by all rounds + the audit
+    z = checkpoint_train_z(spark, stdz)
 
     w = [0.0, 0.0, 0.0, 0.0]  # bias, w1, w2, w3 — zero init (round 1 is exp-free)
     n6 = float(n) * 1000000.0
@@ -756,20 +725,12 @@ def ml_logreg_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # MLlib accuracy-parity audit: LBFGS on the same features/label.
-    # Rebuilt from `base` (a plain columnar plan) rather than the
-    # checkpointed z: MLlib transform over an RDD-backed scan trips a
+    # Rebuilt from the quantized train rows (a plain columnar plan)
+    # rather than the checkpointed z: MLlib transform over an RDD-backed scan trips a
     # Spark 4.1 closure-cleaning quirk (ObservationManager capture)
     # when other sessions' fits ran earlier in the process.
     acc_exact = rows[-1][5] / float(n)
-    z_audit = base.select(
-        "y",
-        *[
-            ((F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                f"z{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    )
+    z_audit = stdz.z(stdz.train)
     vec = to_vector(
         z_audit.select(
             F.array("z1", "z2", "z3").alias("feat"),
@@ -844,15 +805,6 @@ _MLPX_ADAM_LR = 0.001
 _MLPX_B1 = 0.9
 _MLPX_B2 = 0.999
 _MLPX_EPS = 1e-07
-
-
-def _dlit(x: float) -> str:
-    """Spark-SQL double literal for engine-side generated SQL:
-    CAST('<repr>' AS DOUBLE) string-parses correctly-rounded (exact
-    round-trip of the driver float) and constant-folds to the same
-    Literal(double) the Column API's F.lit(x) would embed — the
-    optimized plan is bit-identical, only construction cost changes."""
-    return f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _mlpx_param_names() -> list:
@@ -1168,276 +1120,58 @@ def _mlpx_oracle(optimizer: str = "gd") -> str:
     return "".join(parts)
 
 
-def _mlpx_train(
-    spark: SparkSession,
-    sf_dir: str,
-    optimizer: str = "gd",
-    _return_model: bool = False,
-):
-    """One-hidden-layer neural classifier trained IN-ENGINE by exact
-    full-batch gradient descent (optimizer='gd') or exact full-batch
-    Adam (optimizer='adam' — the reference's own optimizer and
-    hyperparameters, mlp_model.py:10-15), FULL ORACLE — the capstone
-    of the trainer-conversion program (VERDICT r8 #1): the first query
-    family that trains a net WITH a hidden layer entirely under DuckDB
-    replay, closing the nonlinear-trainer value-check gap.  The net is
-    a REDUCED single-hidden-layer analogue of the reference's MLP
-    (mlp_model.py:17-34 is a 256/128/64 three-hidden-layer ReLU net
-    with dropout and softmax; this is 3->8->1 with a saturating hidden
-    nonlinearity and a sigmoid head — the binary specialization of the
-    softmax, parameterized by the logit difference).  The reduction is
-    what makes bit-exact replay possible; the full-size protocol twin
-    (plans/deepq ml_mlp_train_dist) keeps the reference's actual
-    architecture rows-only.  While the reference trains driver-side in
-    Keras (mlp_model.py:74-81), this trains as Spark dataflow: one
-    map-side aggregate job per round.
-
-    Exactness composition (both patterns proven in round 8):
-    hard-tanh hidden activation = GREATEST(LEAST(pre, 1), -1) — no
-    per-unit transcendental, its backprop gate is the exact float
-    comparison abs(pre) < 1 on bit-identical inputs (the
-    plans/deepq.py clamp idiom) — and the logreg exact-GD protocol
-    (plans/mlq.py ml_logreg_train_eval): quantized features,
-    standardization from exact BIGINT/DECIMAL moments, per-row
-    gradient contributions ROUND(.. * 1e6) summed order-free as
-    BIGINT, weight updates one IEEE division each, the sigmoid
-    residual the only per-row transcendental.  The DuckDB twin
-    replays all {_MLPX_ROUNDS} rounds as chained MATERIALIZED CTEs;
-    gradient sums, micro-quantized weights (41 parameters/round),
-    per-round train-accuracy counts AND the final held-out confusion
-    relation all hash-match.
-
-    Output: tidy (round, layer, unit, pidx, grad_q, w_q) — layer
-    'hidden' rows are the 8x4 first-layer params, 'out' the 9 head
-    params, 'acc' per-round (n_correct, n_train), 'cm' the final
-    test-split confusion (label, prediction, count).
-
-    Scale: per round ONE scan of the localCheckpoint-ed standardized
-    train relation feeding a 42-value aggregate collect — map-side
-    partials, no shuffle inside the loop, O(H*d) driver state; the
-    held-out confusion is one groupBy over the test split.  Long sums
-    hold to ~1e11 rows at these magnitudes (ml_logreg_train_eval's
-    bound applies per hidden unit unchanged)."""
-    import math
-
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    base_all = events.select(
-        F.round(F.col("value") * 10000).cast("long").alias("x1q"),
-        (F.col("user_id") % 100).cast("long").alias("x2q"),
-        (F.col("event_id") % 100).cast("long").alias("x3q"),
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-        (F.col("event_id") % 4 == 1).cast("int").alias("istest"),
-    )
-    base = base_all.filter(F.col("istest") == 0)
-    s = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}q").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum((F.col(f"x{i}q") * F.col(f"x{i}q")).cast("decimal(38,0)")).alias(
-                f"s{i}{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    ).first()
-    n = int(s["n"])
-    mean, sd = {}, {}
-    for i in (1, 2, 3):
-        mean[i] = float(s[f"s{i}"]) / float(n)
-        q = float(s[f"s{i}{i}"]) / float(n)
-        sd[i] = math.sqrt(q - mean[i] * mean[i])
-
-    def _z(df: DataFrame) -> DataFrame:
-        return df.select(
-            "y",
-            *[
-                (
-                    (F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])
-                ).alias(f"z{i}")
-                for i in (1, 2, 3)
-            ],
-        )
-
-    # one materialization reused by all rounds; the fixture parquet is
-    # ONE row group, so without the flagship-style boost every round's
-    # 42-aggregate scan runs single-threaded (measured: 13.9 s -> the
-    # repartitioned run at sf0.1; BIGINT sums are order-free, so the
-    # repartition cannot change a single output bit)
-    zsrc = _z(base)
-    target = max(spark.sparkContext.defaultParallelism // 2, 1)
-    if zsrc.rdd.getNumPartitions() < target:
-        zsrc = zsrc.repartition(target)
-    z = zsrc.localCheckpoint()
-    H = _MLPX_H
+def _mlpx_params() -> list:
+    """(name, initial value, tidy address) per parameter: the 8x4
+    'hidden' weights w{j}_{i} (i 0 = bias), then the 'out' head."""
     W, V = _mlpx_init()
-    n6 = float(n) * 1000000.0
-    out: list = []
-    adam = optimizer == "adam"
-    MA = [0.0] * (4 * H + H + 1)  # Adam first-moment EMAs (param order)
-    VA = [0.0] * (4 * H + H + 1)  # Adam second-moment EMAs
+    return [
+        (f"w{j}_{i}", W[j - 1][i], ("hidden", j, i))
+        for j in range(1, _MLPX_H + 1)
+        for i in range(4)
+    ] + head_params(V)
 
-    def _staged(rel: DataFrame) -> DataFrame:
-        """Forward pass with the CURRENT driver-held weights: chained
-        projections pre -> h -> m (textual mirror of the a_/b_ CTEs)."""
-        cur = rel.select(
-            "y",
-            "z1",
-            "z2",
-            "z3",
-            *[
-                (
-                    F.lit(W[j - 1][0])
-                    + F.lit(W[j - 1][1]) * F.col("z1")
-                    + F.lit(W[j - 1][2]) * F.col("z2")
-                    + F.lit(W[j - 1][3]) * F.col("z3")
-                ).alias(f"pre{j}")
-                for j in range(1, H + 1)
-            ],
+
+def _mlpx_forward(w: dict) -> tuple:
+    """Hidden pre-activations and their hard-tanh clamps, then the
+    sigmoid-head margin over h1..hH."""
+    H, d = _MLPX_H, sql_double
+    pres = [
+        f"{d(w[f'w{j}_0'])} + {d(w[f'w{j}_1'])} * z1"
+        f" + {d(w[f'w{j}_2'])} * z2 + {d(w[f'w{j}_3'])} * z3 AS pre{j}"
+        for j in range(1, H + 1)
+    ]
+    hs = [f"{hardtanh_sql(f'pre{j}')} AS h{j}" for j in range(1, H + 1)]
+    return [pres, hs], margin_sql(w, [f"h{j}" for j in range(1, H + 1)])
+
+
+def _mlpx_gradient(w: dict) -> tuple:
+    """Backprop through the hard-tanh gate abs(pre) < 1 — no extra
+    layer, each hidden delta is inlined into its four sums."""
+    H = _MLPX_H
+    grads = head_grads([f"h{j}" for j in range(1, H + 1)])
+    for j in range(1, H + 1):
+        dh = (
+            f"(CASE WHEN ABS(pre{j}) < 1.0D THEN resid * {sql_double(w[f'v{j}'])}"
+            " ELSE 0.0D END)"
         )
-        cur = cur.select(
-            "*",
-            *[
-                F.greatest(F.least(F.col(f"pre{j}"), F.lit(1.0)), F.lit(-1.0)).alias(
-                    f"h{j}"
-                )
-                for j in range(1, H + 1)
-            ],
-        )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"h{j}")
-        return cur.select("*", m.alias("m"))
+        grads[f"w{j}_0"] = dh
+        for i in (1, 2, 3):
+            grads[f"w{j}_{i}"] = f"{dh} * z{i}"
+    return [], grads
 
-    # Per-round gradient pass as ONE SQL string over a temp view of the
-    # checkpointed z (optimization guide §1.2 step 2 / §7.3): the
-    # Column-API version built ~1000 py4j-backed expression objects per
-    # round — serial driver latency at ANY scale.  The SQL text parses
-    # in one JVM call, and every CAST('<repr>' AS DOUBLE) constant-folds
-    # to the exact IEEE double F.lit() embedded, so the optimized plan
-    # (and every output bit) is identical to the Column-API build.
-    import uuid as _uuid
 
-    zview = f"mlpx_z_{_uuid.uuid4().hex[:8]}"
-    z.createOrReplaceTempView(zview)
-
-    def _round_sql() -> str:
-        pres = ", ".join(
-            f"{_dlit(W[j - 1][0])} + {_dlit(W[j - 1][1])} * z1"
-            f" + {_dlit(W[j - 1][2])} * z2"
-            f" + {_dlit(W[j - 1][3])} * z3 AS pre{j}"
-            for j in range(1, H + 1)
-        )
-        hs = ", ".join(
-            f"GREATEST(LEAST(pre{j}, 1.0D), -1.0D) AS h{j}"
-            for j in range(1, H + 1)
-        )
-        m_expr = _dlit(V[0]) + "".join(
-            f" + {_dlit(V[j])} * h{j}" for j in range(1, H + 1)
-        )
-        g_cols = ["SUM(CAST(ROUND(resid * 1000000.0D) AS BIGINT)) AS gvb"]
-        for j in range(1, H + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND(resid * h{j} * 1000000.0D) AS BIGINT)) AS gv{j}"
-            )
-        for j in range(1, H + 1):
-            dh = (
-                f"(CASE WHEN ABS(pre{j}) < 1.0D THEN resid * {_dlit(V[j])}"
-                " ELSE 0.0D END)"
-            )
-            g_cols.append(
-                f"SUM(CAST(ROUND({dh} * 1000000.0D) AS BIGINT)) AS gw{j}_0"
-            )
-            for i in (1, 2, 3):
-                g_cols.append(
-                    f"SUM(CAST(ROUND({dh} * z{i} * 1000000.0D) AS BIGINT))"
-                    f" AS gw{j}_{i}"
-                )
-        g_cols.append("SUM(CAST((m >= 0.0D) = (y = 1) AS BIGINT)) AS nc")
-        return (
-            f"SELECT {', '.join(g_cols)} FROM ("
-            "SELECT *, 1.0D / (1.0D + EXP(-m)) - CAST(y AS DOUBLE) AS resid"
-            " FROM ("
-            f"SELECT *, {m_expr} AS m FROM ("
-            f"SELECT *, {hs} FROM ("
-            f"SELECT y, z1, z2, z3, {pres} FROM {zview}))))"
-        )
-
-    for r in range(1, _MLPX_ROUNDS + 1):
-        g = spark.sql(_round_sql()).first()
-        # parameter bookkeeping in _mlpx_param_names() order: a flat
-        # view over (gradient-sum name, get weight, set weight, adam
-        # moment slot index)
-        pkeys = [(f"w{j}_{i}", f"gw{j}_{i}", (j - 1, i)) for j in range(1, H + 1) for i in range(4)]
-        pkeys.append(("vb", "gvb", (None, 0)))
-        pkeys += [(f"v{j}", f"gv{j}", (None, j)) for j in range(1, H + 1)]
-        if adam:
-            bc1 = 1.0 - _MLPX_B1**r
-            bc2 = 1.0 - _MLPX_B2**r
-        for k, (pn, gn, (wj, wi)) in enumerate(pkeys):
-            cur_w = W[wj][wi] if wj is not None else V[wi]
-            if not adam:
-                # mirror of the GD w_{r} CTE: one division + one
-                # multiply-subtract per parameter
-                new_w = cur_w - _MLPX_LR * (float(g[gn]) / n6)
-            else:
-                # mirror of the Adam w_{r} CTE: EMAs + bias-corrected
-                # step, all driver-side scalar IEEE ops
-                gd = float(g[gn]) / n6
-                MA[k] = 0.9 * MA[k] + (1.0 - 0.9) * gd
-                VA[k] = 0.999 * VA[k] + (1.0 - 0.999) * (gd * gd)
-                new_w = cur_w - 0.001 * (
-                    (MA[k] / bc1) / (math.sqrt(VA[k] / bc2) + 1e-07)
-                )
-            if wj is not None:
-                W[wj][wi] = new_w
-            else:
-                V[wi] = new_w
-        for k, (pn, gn, (wj, wi)) in enumerate(pkeys):
-            w_now = W[wj][wi] if wj is not None else V[wi]
-            layer = "hidden" if wj is not None else "out"
-            unit = (wj + 1) if wj is not None else 0
-            pidx = wi
-            row = (
-                r,
-                layer,
-                unit,
-                pidx,
-                int(g[gn]),
-                _lrgd_round_half_away(w_now * 1000000),
-            )
-            if adam:
-                row = row + (
-                    _lrgd_round_half_away(MA[k] * 1000000000),
-                    _lrgd_round_half_away(VA[k] * 1000000000000),
-                )
-            out.append(row)
-        acc_row = (r, "acc", 0, 0, int(g["nc"]), n)
-        out.append(acc_row + (0, 0) if adam else acc_row)
-
-    spark.catalog.dropTempView(zview)
-    if _return_model:
-        # fitted weights + standardization stats for serving callers
-        # (plans/streamq.stream_mlp_trained_scoring) — bit-identical
-        # to the oracle's w_{ROUNDS} columns by trajectory mirroring
-        return {"W": W, "V": V, "mean": mean, "sd": sd, "n": n}
-
-    cm = (
-        _staged(_z(base_all.filter(F.col("istest") == 1)))
-        .select("y", (F.col("m") >= F.lit(0.0)).cast("long").alias("pred"))
-        .groupBy("y", "pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .collect()
+def _mlpx_adam_step(r: int, w: float, m: float, v: float) -> float:
+    """The Adam paper's Algorithm-1 step: both moments bias-corrected,
+    epsilon added to the corrected sqrt(v)."""
+    return w - 0.001 * (
+        (m / (1.0 - _MLPX_B1**r)) / (math.sqrt(v / (1.0 - _MLPX_B2**r)) + 1e-07)
     )
-    for row in cm:
-        cm_row = (
-            _MLPX_ROUNDS, "cm", int(row["y"]), int(row["pred"]), int(row["cnt"]), 0,
-        )
-        out.append(cm_row + (0, 0) if adam else cm_row)
-    schema = "round long, layer string, unit long, pidx long, grad_q long, w_q long"
-    if adam:
-        schema += ", m_q long, v_q long"
-    return spark.createDataFrame(out, schema).orderBy(
-        "round", "layer", "unit", "pidx"
-    )
+
+
+MLPX = ExactArch(
+    "mlpx", _MLPX_ROUNDS, _MLPX_LR, _mlpx_params, _mlpx_forward, _mlpx_gradient,
+    _mlpx_adam_step,
+)
 
 
 @register(
@@ -1448,9 +1182,31 @@ def _mlpx_train(
     "held-out confusion",
 )
 def ml_mlp_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See _mlpx_train (optimizer='gd'): plain full-batch exact-GD —
-    the trainer-conversion capstone (VERDICT r8 #1)."""
-    return _mlpx_train(spark, sf_dir, "gd")
+    """One-hidden-layer neural classifier trained IN-ENGINE by exact
+    full-batch gradient descent, FULL ORACLE — the capstone of the
+    trainer-conversion program (VERDICT r8 #1): a REDUCED analogue of
+    the reference's MLP (mlp_model.py:17-34 is a 256/128/64 ReLU net
+    with dropout and softmax; this is 3->8->1 with a hard-tanh hidden
+    clamp and a sigmoid head, the binary specialization of the
+    softmax).  The reduction is what makes bit-exact replay possible;
+    the full-size protocol twin (plans/deepq ml_mlp_train_dist) keeps
+    the reference's architecture rows-only.
+
+    Exactness: hard-tanh = GREATEST(LEAST(pre, 1), -1), its backprop
+    gate the exact float comparison abs(pre) < 1; per-row gradient
+    contributions ROUND(.. * 1e6) summed order-free as BIGINT; weight
+    updates one IEEE division each; the sigmoid residual the only
+    per-row transcendental (plans/exactx has the shared loop).  The
+    DuckDB twin replays all rounds as chained MATERIALIZED CTEs;
+    gradient sums, micro-quantized weights (41 parameters/round),
+    per-round train-accuracy counts AND the final held-out confusion
+    all hash-match.
+
+    Output: tidy (round, layer, unit, pidx, grad_q, w_q) — 'hidden'
+    rows are the 8x4 first-layer params, 'out' the 9 head params,
+    'acc' per-round (n_correct, n_train), 'cm' the test-split
+    confusion (label, prediction, count)."""
+    return exact_tidy(spark, MLPX, fit_exact(spark, sf_dir, MLPX))
 
 
 @register(
@@ -1461,7 +1217,7 @@ def ml_mlp_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "full oracle incl. moment EMAs + held-out confusion",
 )
 def ml_mlp_adam_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See _mlpx_train (optimizer='adam'): the SAME 3->8->1 hard-tanh
+    """The SAME 3->8->1 hard-tanh
     net trained with the reference's optimizer hyperparameters
     (mlp_model.py:10-15: Adam lr=1e-3, Keras-default beta1=0.9 /
     beta2=0.999 / eps=1e-7) in the Adam paper's Algorithm-1
@@ -1479,7 +1235,7 @@ def ml_mlp_adam_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides (no POWER() parity risk).  Scale: identical to ml_mlp_exact
     — the optimizer is O(params) driver math; per round still ONE
     map-side aggregate scan."""
-    return _mlpx_train(spark, sf_dir, "adam")
+    return exact_tidy(spark, MLPX, fit_exact(spark, sf_dir, MLPX, "adam"))
 
 
 _NB_CLASSES = ["click", "error", "purchase", "signup", "view"]

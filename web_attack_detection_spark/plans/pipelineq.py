@@ -1278,8 +1278,9 @@ GROUP BY 1 ORDER BY 1"""
 )
 def pipe_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difficulty-ordered curriculum for a training pipeline: fit the
-    exact-GD MLP (plans/mlq._mlpx_train, weights bit-identical to the
-    oracle's replay), score EVERY example with the trained margin,
+    exact-GD MLP (plans/mlq MLPX via plans/exactx.fit_exact, weights
+    bit-identical to the oracle's replay), score EVERY example with
+    the trained margin (the model's one SQL-text forward fragment),
     and assign 4 curriculum stages by EXACT quartiles of |margin| —
     most-confident examples first (stage 0), decision-boundary
     examples last (stage 3), the classic easy-to-hard schedule, with
@@ -1295,54 +1296,20 @@ def pipe_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB twin keeps the sorted-list exact form, proving the
     distributed boundary pass equal bit-for-bit."""
     from web_attack_detection_spark.operators.ranking import ranged_row_number
-    from web_attack_detection_spark.plans.mlq import _mlpx_train
+    from web_attack_detection_spark.plans.exactx import apply_layers, fit_exact
+    from web_attack_detection_spark.plans.mlq import MLPX
 
-    model = _mlpx_train(spark, sf_dir, "gd", _return_model=True)
-    W, V, mean, sd = model["W"], model["V"], model["mean"], model["sd"]
-    H = len(W)
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    cur = events.select(
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-        *[
-            (
-                (xq.cast("double") - F.lit(mean[i])) / F.lit(sd[i])
-            ).alias(f"z{i}")
-            for i, xq in (
-                (1, F.round(F.col("value") * 10000).cast("long")),
-                (2, (F.col("user_id") % 100).cast("long")),
-                (3, (F.col("event_id") % 100).cast("long")),
-            )
-        ],
+    fit = fit_exact(spark, sf_dir, MLPX)
+    layers, m = MLPX.forward(fit.w)
+    scored = (
+        apply_layers(fit.stdz.z(fit.stdz.base_all), layers)
+        .selectExpr(
+            "y",
+            f"ABS(CAST(ROUND(({m}) * 1000000.0D) AS BIGINT)) AS a",
+            f"CAST(({m}) >= 0.0D AS BIGINT) AS pred",
+        )
+        .localCheckpoint()
     )
-    cur = cur.select(
-        "y",
-        *[
-            (
-                F.lit(W[j - 1][0])
-                + F.lit(W[j - 1][1]) * F.col("z1")
-                + F.lit(W[j - 1][2]) * F.col("z2")
-                + F.lit(W[j - 1][3]) * F.col("z3")
-            ).alias(f"pre{j}")
-            for j in range(1, H + 1)
-        ],
-    )
-    cur = cur.select(
-        "y",
-        *[
-            F.greatest(F.least(F.col(f"pre{j}"), F.lit(1.0)), F.lit(-1.0)).alias(
-                f"h{j}"
-            )
-            for j in range(1, H + 1)
-        ],
-    )
-    m = F.lit(V[0])
-    for j in range(1, H + 1):
-        m = m + F.lit(V[j]) * F.col(f"h{j}")
-    scored = cur.select(
-        "y",
-        F.abs(F.round(m * F.lit(1000000.0)).cast("long")).alias("a"),
-        (m >= F.lit(0.0)).cast("long").alias("pred"),
-    ).localCheckpoint()
     ranked = ranged_row_number(
         scored.select("a"), "a", [F.col("a").asc()], total_col="nn"
     )

@@ -23,8 +23,9 @@ actual architecture rows-only):
   timesteps of a scalar input — same quantized features, moments and
   train/test split as ml_mlp_exact (one shared STDZ_BASE_CTES text);
 - state: 4 hard-tanh units, s_t = clamp(b + u*z_t + R @ s_{t-1}),
-  s_0 = 0 (the t=1 step omits the recurrence term on BOTH sides —
-  textual mirroring, not algebraic simplification);
+  s_0 = 0 (the t=1 step omits the recurrence term in the engine
+  fragment and the DuckDB replay alike — the same IEEE op sequence,
+  not an algebraic simplification);
 - head: sigmoid margin m = vb + v . s_3 (binary target, the 2-class
   specialization of the reference's softmax).
 
@@ -32,11 +33,17 @@ Exactness composition (every pattern proven in rounds 8-9):
 hard-tanh = GREATEST/LEAST with backprop gates as exact float
 comparisons abs(pre) < 1 on bit-identical inputs; BPTT derivative
 chains d3 -> c2 -> d2 -> c1 -> d1 built as chained projections with
-IDENTICAL left-associated expression text in the engine and the SQL;
+the same left-associated expression order in the engine and the SQL;
 per-row gradient contributions ROUND(... * 1e6) summed order-free as
 BIGINT; weight update one IEEE division + multiply-subtract per
 parameter; exp(-m) the only transcendental (the established sigmoid
 residual idiom).
+
+Engine side: ``RNNX`` — the parameter table, ONE SQL-text forward
+fragment built from the current weights, and the BPTT gradient
+layers — run by plans/exactx's shared loop.  Training rounds, the
+held-out confusion and plans/streamq stream_rnn_trained_scoring all
+apply that one fragment.
 
 Scale: per round ONE map-side scan of the localCheckpoint-ed
 standardized train relation feeding a 30-value aggregate — no
@@ -51,15 +58,19 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from web_attack_detection_spark.io.sources import load_table
-from web_attack_detection_spark.plans.mlq import (
-    STDZ_BASE_CTES,
-    _dlit,
-    _lrgd_round_half_away,
+from web_attack_detection_spark.plans.exactx import (
+    ExactArch,
+    exact_tidy,
+    fit_exact,
+    hardtanh_sql,
+    head_grads,
+    head_params,
+    margin_sql,
 )
+from web_attack_detection_spark.plans.mlq import STDZ_BASE_CTES
 from web_attack_detection_spark.plans.registry import register
+from web_attack_detection_spark.sqltext import sql_double
 
 _RNNX_H = 4  # recurrent units
 _RNNX_T = 3  # timesteps (the three standardized features as a sequence)
@@ -109,7 +120,7 @@ def _rnnx_param_names() -> list:
     return names + ["vb"] + [f"v{j}" for j in range(1, H + 1)]
 
 
-# --- shared textual builders (engine mirrors these forms exactly) ---------
+# --- DuckDB oracle builders ------------------------------------------------
 
 
 def _rnnx_pre_sql(t: int, j: int, wsrc: str) -> str:
@@ -419,280 +430,86 @@ def _rnnx_oracle(optimizer: str = "gd") -> str:
     return "".join(parts)
 
 
-def _rnnx_train(
-    spark: SparkSession,
-    sf_dir: str,
-    optimizer: str = "gd",
-    _return_model: bool = False,
-):
-    """Engine-side trainer: the Spark-dataflow mirror of the oracle.
-    See the module docstring for semantics and exactness composition;
-    reference spec anchor: models/rnn_model.py:17-34 (SimpleRNN
-    class), main.py:138-151 (the train/eval protocol).
-    optimizer='adam' trains with Keras' Adam formulation (see
-    _rnnx_lr_t) — moment EMAs emitted as 1e9/1e12-quantized columns."""
-    H, T = _RNNX_H, _RNNX_T
-    adam = optimizer == "adam"
-    events = load_table(spark, sf_dir, "events").drop("props", "ts")
-    base_all = events.select(
-        F.round(F.col("value") * 10000).cast("long").alias("x1q"),
-        (F.col("user_id") % 100).cast("long").alias("x2q"),
-        (F.col("event_id") % 100).cast("long").alias("x3q"),
-        F.col("event_type").isin("purchase", "signup").cast("int").alias("y"),
-        (F.col("event_id") % 4 == 1).cast("int").alias("istest"),
-    )
-    base = base_all.filter(F.col("istest") == 0)
-    s = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}q").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum((F.col(f"x{i}q") * F.col(f"x{i}q")).cast("decimal(38,0)")).alias(
-                f"s{i}{i}"
-            )
-            for i in (1, 2, 3)
-        ],
-    ).first()
-    n = int(s["n"])
-    mean, sd = {}, {}
-    for i in (1, 2, 3):
-        mean[i] = float(s[f"s{i}"]) / float(n)
-        q = float(s[f"s{i}{i}"]) / float(n)
-        sd[i] = math.sqrt(q - mean[i] * mean[i])
-
-    def _z(df: DataFrame) -> DataFrame:
-        return df.select(
-            "y",
-            *[
-                (
-                    (F.col(f"x{i}q").cast("double") - F.lit(mean[i])) / F.lit(sd[i])
-                ).alias(f"z{i}")
-                for i in (1, 2, 3)
-            ],
-        )
-
-    # one materialization reused by all rounds (ml_mlp_exact's fixture
-    # boost: the parquet is ONE row group; BIGINT contribution sums are
-    # order-free, so the repartition cannot change an output bit)
-    zsrc = _z(base)
-    target = max(spark.sparkContext.defaultParallelism // 2, 1)
-    if zsrc.rdd.getNumPartitions() < target:
-        zsrc = zsrc.repartition(target)
-    z = zsrc.localCheckpoint()
+def _rnnx_params() -> list:
+    """(name, initial value, tidy address) per parameter: 'in' rows
+    carry (bias, input weight) as pidx 0/1, 'rec' the HxH recurrence,
+    then the 'out' head."""
     B, U, R, V = _rnnx_init()
-    n6 = float(n) * 1000000.0
-    out: list = []
-    n_params = len(_rnnx_param_names())
-    MA = [0.0] * n_params  # Adam first-moment EMAs (param order)
-    VA = [0.0] * n_params  # Adam second-moment EMAs
-
-    def _fwd(rel: DataFrame) -> DataFrame:
-        """Forward pass with the CURRENT driver-held weights: chained
-        projections pre{t}/s{t}, textual mirror of the a_ CTE chain
-        (t=1 omits the recurrence term — s_0 = 0 on both sides)."""
-        cur = rel
-        for t in range(1, T + 1):
-            pres = []
-            for j in range(1, H + 1):
-                e = F.lit(B[j - 1]) + F.lit(U[j - 1]) * F.col(f"z{t}")
-                if t > 1:
-                    for k in range(1, H + 1):
-                        e = e + F.lit(R[j - 1][k - 1]) * F.col(f"s{t - 1}_{k}")
-                pres.append(e.alias(f"pre{t}_{j}"))
-            cur = cur.select("*", *pres)
-            cur = cur.select(
-                "*",
-                *[
-                    F.greatest(
-                        F.least(F.col(f"pre{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"s{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"s3_{j}")
-        return cur.select("*", m.alias("m"))
-
-    # Per-round BPTT pass as ONE SQL string over a temp view of the
-    # checkpointed z (the ml_mlp_exact pattern — optimization guide
-    # §1.2 step 2 / §7.3): the Column-API build issued thousands of
-    # py4j-backed expression constructions per round, pure serial
-    # driver latency at any scale.  Every CAST('<repr>' AS DOUBLE)
-    # constant-folds to the exact double F.lit() embedded, so the
-    # optimized plan — and every output bit — is unchanged.
-    import uuid as _uuid
-
-    zview = f"rnnx_z_{_uuid.uuid4().hex[:8]}"
-    z.createOrReplaceTempView(zview)
-
-    def _round_sql() -> str:
-        layers = [f"SELECT y, z1, z2, z3 FROM {zview}"]
-
-        def _stack(cols: list) -> None:
-            layers.append("SELECT *, " + ", ".join(cols) + " FROM (" + layers[-1] + ")")
-
-        for t in range(1, T + 1):
-            pres = []
-            for j in range(1, H + 1):
-                e = f"{_dlit(B[j - 1])} + {_dlit(U[j - 1])} * z{t}"
-                if t > 1:
-                    for k in range(1, H + 1):
-                        e += f" + {_dlit(R[j - 1][k - 1])} * s{t - 1}_{k}"
-                pres.append(f"{e} AS pre{t}_{j}")
-            _stack(pres)
-            _stack(
-                [
-                    f"GREATEST(LEAST(pre{t}_{j}, 1.0D), -1.0D) AS s{t}_{j}"
-                    for j in range(1, H + 1)
-                ]
-            )
-        m_expr = _dlit(V[0]) + "".join(
-            f" + {_dlit(V[j])} * s3_{j}" for j in range(1, H + 1)
-        )
-        _stack([f"{m_expr} AS m"])
-        _stack(["1.0D / (1.0D + EXP(-m)) - CAST(y AS DOUBLE) AS resid"])
-        _stack(
-            [
-                f"CASE WHEN ABS(pre3_{j}) < 1.0D THEN resid * {_dlit(V[j])}"
-                f" ELSE 0.0D END AS d3_{j}"
-                for j in range(1, H + 1)
-            ]
-        )
-
-        def _carry(t: int, k: int) -> str:
-            e = f"{_dlit(R[0][k - 1])} * d{t + 1}_1"
-            for j in range(2, H + 1):
-                e += f" + {_dlit(R[j - 1][k - 1])} * d{t + 1}_{j}"
-            return e
-
-        _stack([f"{_carry(2, k)} AS c2_{k}" for k in range(1, H + 1)])
-        _stack(
-            [
-                f"CASE WHEN ABS(pre2_{j}) < 1.0D THEN c2_{j} ELSE 0.0D END AS d2_{j}"
-                for j in range(1, H + 1)
-            ]
-        )
-        _stack([f"{_carry(1, k)} AS c1_{k}" for k in range(1, H + 1)])
-        _stack(
-            [
-                f"CASE WHEN ABS(pre1_{j}) < 1.0D THEN c1_{j} ELSE 0.0D END AS d1_{j}"
-                for j in range(1, H + 1)
-            ]
-        )
-        g_cols = ["SUM(CAST(ROUND(resid * 1000000.0D) AS BIGINT)) AS gvb"]
-        for j in range(1, H + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND(resid * s3_{j} * 1000000.0D) AS BIGINT)) AS gv{j}"
-            )
-        for j in range(1, H + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND((d1_{j} + d2_{j} + d3_{j}) * 1000000.0D)"
-                f" AS BIGINT)) AS gb{j}"
-            )
-        for j in range(1, H + 1):
-            g_cols.append(
-                f"SUM(CAST(ROUND((d1_{j} * z1 + d2_{j} * z2 + d3_{j} * z3)"
-                f" * 1000000.0D) AS BIGINT)) AS gu{j}"
-            )
-        for j in range(1, H + 1):
-            for k in range(1, H + 1):
-                g_cols.append(
-                    f"SUM(CAST(ROUND((d2_{j} * s1_{k} + d3_{j} * s2_{k})"
-                    f" * 1000000.0D) AS BIGINT)) AS gr{j}_{k}"
-                )
-        g_cols.append("SUM(CAST((m >= 0.0D) = (y = 1) AS BIGINT)) AS nc")
-        return f"SELECT {', '.join(g_cols)} FROM ({layers[-1]})"
-
-    for r in range(1, _RNNX_ROUNDS + 1):
-        g = spark.sql(_round_sql()).first()
-        # parameter bookkeeping in _rnnx_param_names() order: gradient
-        # column is uniformly "g" + param name; (layer, unit, pidx)
-        # carries the tidy-output address, get/set close over B/U/R/V
-        pkeys = []
-        for j in range(1, H + 1):
-            pkeys.append((f"b{j}", ("in", j, 0), ("B", j - 1, None)))
-        for j in range(1, H + 1):
-            pkeys.append((f"u{j}", ("in", j, 1), ("U", j - 1, None)))
-        for j in range(1, H + 1):
-            for k in range(1, H + 1):
-                pkeys.append((f"r{j}_{k}", ("rec", j, k), ("R", j - 1, k - 1)))
-        pkeys.append(("vb", ("out", 0, 0), ("V", 0, None)))
-        for j in range(1, H + 1):
-            pkeys.append((f"v{j}", ("out", 0, j), ("V", j, None)))
-        arrays = {"B": B, "U": U, "R": R, "V": V}
-
-        def _get(slot):
-            name, i, k_ = slot
-            a = arrays[name]
-            return a[i][k_] if k_ is not None else a[i]
-
-        def _set(slot, val):
-            name, i, k_ = slot
-            a = arrays[name]
-            if k_ is not None:
-                a[i][k_] = val
-            else:
-                a[i] = val
-
-        if adam:
-            lr_t = _rnnx_lr_t(r)
-        for kidx, (pn, _addr, slot) in enumerate(pkeys):
-            gsum = float(g[f"g{pn}"])
-            if not adam:
-                # mirror of the GD w_ CTE: one division + one
-                # multiply-subtract per parameter
-                _set(slot, _get(slot) - _RNNX_LR * (gsum / n6))
-            else:
-                # mirror of the Keras-Adam w_ CTE: moment EMAs + the
-                # lr_t-folded step, epsilon on the uncorrected sqrt(v)
-                gd = gsum / n6
-                MA[kidx] = 0.9 * MA[kidx] + (1.0 - 0.9) * gd
-                VA[kidx] = 0.999 * VA[kidx] + (1.0 - 0.999) * (gd * gd)
-                _set(
-                    slot,
-                    _get(slot)
-                    - lr_t * (MA[kidx] / (math.sqrt(VA[kidx]) + 1e-07)),
-                )
-        for kidx, (pn, (layer, unit, pidx), slot) in enumerate(pkeys):
-            row = (
-                r,
-                layer,
-                unit,
-                pidx,
-                int(g[f"g{pn}"]),
-                _lrgd_round_half_away(_get(slot) * 1000000),
-            )
-            if adam:
-                row = row + (
-                    _lrgd_round_half_away(MA[kidx] * 1000000000),
-                    _lrgd_round_half_away(VA[kidx] * 1000000000000),
-                )
-            out.append(row)
-        acc_row = (r, "acc", 0, 0, int(g["nc"]), n)
-        out.append(acc_row + (0, 0) if adam else acc_row)
-
-    spark.catalog.dropTempView(zview)
-    if _return_model:
-        return {"B": B, "U": U, "R": R, "V": V, "mean": mean, "sd": sd, "n": n}
-
-    cm = (
-        _fwd(_z(base_all.filter(F.col("istest") == 1)))
-        .select("y", (F.col("m") >= F.lit(0.0)).cast("long").alias("pred"))
-        .groupBy("y", "pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .collect()
+    units = range(1, _RNNX_H + 1)
+    return (
+        [(f"b{j}", B[j - 1], ("in", j, 0)) for j in units]
+        + [(f"u{j}", U[j - 1], ("in", j, 1)) for j in units]
+        + [(f"r{j}_{k}", R[j - 1][k - 1], ("rec", j, k)) for j in units for k in units]
+        + head_params(V)
     )
-    for row in cm:
-        cm_row = (
-            _RNNX_ROUNDS, "cm", int(row["y"]), int(row["pred"]), int(row["cnt"]), 0,
-        )
-        out.append(cm_row + (0, 0) if adam else cm_row)
-    schema = "round long, layer string, unit long, pidx long, grad_q long, w_q long"
-    if adam:
-        schema += ", m_q long, v_q long"
-    return spark.createDataFrame(out, schema).orderBy(
-        "round", "layer", "unit", "pidx"
+
+
+def _rnnx_forward(w: dict) -> tuple:
+    """Per timestep the pre-activations (t=1 omits the recurrence —
+    s_0 = 0, as in _rnnx_pre_sql) and their hard-tanh states, then
+    the head margin over the final state."""
+    units, d = range(1, _RNNX_H + 1), sql_double
+    layers = []
+    for t in range(1, _RNNX_T + 1):
+        pres = []
+        for j in units:
+            e = f"{d(w[f'b{j}'])} + {d(w[f'u{j}'])} * z{t}"
+            if t > 1:
+                e += "".join(f" + {d(w[f'r{j}_{k}'])} * s{t - 1}_{k}" for k in units)
+            pres.append(f"{e} AS pre{t}_{j}")
+        layers.append(pres)
+        layers.append([f"{hardtanh_sql(f'pre{t}_{j}')} AS s{t}_{j}" for j in units])
+    return layers, margin_sql(w, [f"s{_RNNX_T}_{j}" for j in units])
+
+
+def _rnnx_gradient(w: dict) -> tuple:
+    """BPTT as chained projections: gated deltas d3 -> carry c2 -> d2
+    -> c1 -> d1 (left-associated sums, as in _rnnx_c_sql)."""
+    units, d = range(1, _RNNX_H + 1), sql_double
+
+    def gate(t: int, src) -> list:
+        return [
+            f"CASE WHEN ABS(pre{t}_{j}) < 1.0D THEN {src(j)} ELSE 0.0D END AS d{t}_{j}"
+            for j in units
+        ]
+
+    def carry(t: int) -> list:
+        return [
+            " + ".join(f"{d(w[f'r{j}_{k}'])} * d{t + 1}_{j}" for j in units)
+            + f" AS c{t}_{k}"
+            for k in units
+        ]
+
+    layers = [
+        gate(3, lambda j: f"resid * {d(w[f'v{j}'])}"),
+        carry(2),
+        gate(2, lambda j: f"c2_{j}"),
+        carry(1),
+        gate(1, lambda j: f"c1_{j}"),
+    ]
+    grads = head_grads([f"s3_{j}" for j in units])
+    grads.update({f"b{j}": f"(d1_{j} + d2_{j} + d3_{j})" for j in units})
+    grads.update({f"u{j}": f"(d1_{j} * z1 + d2_{j} * z2 + d3_{j} * z3)" for j in units})
+    grads.update(
+        {
+            f"r{j}_{k}": f"(d2_{j} * s1_{k} + d3_{j} * s2_{k})"
+            for j in units
+            for k in units
+        }
     )
+    return layers, grads
+
+
+def _rnnx_adam_step(r: int, w: float, m: float, v: float) -> float:
+    """Keras' Adam step: bias corrections folded into lr_t, epsilon on
+    the UNCORRECTED sqrt(v)."""
+    return w - _rnnx_lr_t(r) * (m / (math.sqrt(v) + 1e-07))
+
+
+RNNX = ExactArch(
+    "rnnx", _RNNX_ROUNDS, _RNNX_LR, _rnnx_params, _rnnx_forward, _rnnx_gradient,
+    _rnnx_adam_step,
+)
 
 
 @register(
@@ -703,12 +520,12 @@ def _rnnx_train(
     "rounds), full oracle incl. held-out confusion",
 )
 def ml_rnn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See the module docstring and _rnnx_train: training of the
+    """See the module docstring: training of the
     reference's recurrent model class (models/rnn_model.py:17-34)
     under full value-level DuckDB replay — gradients through 3-step
     BPTT, weights, per-round accuracy, and the held-out confusion all
     hash-match (VERDICT r9 #2)."""
-    return _rnnx_train(spark, sf_dir)
+    return exact_tidy(spark, RNNX, fit_exact(spark, sf_dir, RNNX))
 
 
 @register(
@@ -731,4 +548,4 @@ def ml_rnn_adam_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e6-quantized weight, AND the 1e9/1e12-quantized moment EMAs.
     Scale: identical to ml_rnn_exact — the optimizer is O(params)
     driver math; per round still ONE map-side aggregate scan."""
-    return _rnnx_train(spark, sf_dir, "adam")
+    return exact_tidy(spark, RNNX, fit_exact(spark, sf_dir, RNNX, "adam"))

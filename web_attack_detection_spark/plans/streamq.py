@@ -1201,8 +1201,45 @@ def _seqnet_stream_agg(s: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# trained-model stream scoring: the exact-GD MLP served on the stream
+# trained-model stream scoring: the exact trainers served on the stream
 # ---------------------------------------------------------------------------
+
+
+def _stream_trained_scoring(spark: SparkSession, sf_dir: str, arch) -> DataFrame:
+    """Fit the exact model ``arch`` in-engine (plans/exactx.fit_exact —
+    weights bit-identical to the oracle's final w_ CTE), then score
+    every arriving event in-stream: quantize, standardize with the
+    TRAIN moments, apply the model's SQL-text forward fragment (the
+    one its training rounds use — whole-stage-codegen expressions, no
+    Python worker, no second state store), and count per (tumbling
+    hour, predicted class) under a 30-minute watermark — state bounded
+    by open windows x 2 classes, evicted by the watermark."""
+    from web_attack_detection_spark.plans.exactx import (
+        apply_layers,
+        fit_exact,
+        quantize,
+    )
+
+    fit = fit_exact(spark, sf_dir, arch)
+    layers, m = arch.forward(fit.w)
+
+    def agg_fn(s: DataFrame) -> DataFrame:
+        src = s.withWatermark("ts", "30 minutes") if s.isStreaming else s
+        scored = apply_layers(fit.stdz.z(quantize(src, "ts"), "ts"), layers)
+        return (
+            scored.selectExpr("ts", f"CAST({m} >= 0.0D AS BIGINT) AS pred")
+            .groupBy(F.window("ts", "1 hour"), "pred")
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+            .select(
+                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                    "window_start"
+                ),
+                "pred",
+                "n",
+            )
+        )
+
+    return _replay(spark, sf_dir, agg_fn).orderBy("window_start", "pred")
 
 
 def _stream_mlpx_oracle() -> str:
@@ -1259,86 +1296,20 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
 )
 def stream_mlp_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closes the train->serve loop on the streaming surface with a
-    TRAINED (not pinned) model: the exact-GD MLP of plans/mlq.
-    ml_mlp_exact is fitted in-engine (6 full-batch rounds, weights
-    bit-identical to the oracle's w_6 by trajectory mirroring), then
-    every arriving event is scored in-stream — standardize with the
-    TRAIN moments, hard-tanh forward pass as whole-stage-codegen
-    column expressions (no Python worker, no second state store) —
-    and aggregated into per-(tumbling hour, predicted class) counts
-    under a 30-minute watermark.  stream_seqnet_scoring proved pinned
-    integer weights on this path; this query upgrades the model to
-    one whose weights the oracle itself derives, so the DuckDB twin
-    replays training AND serving end-to-end.  The reference's
-    deployment story (train offline in Keras, score flows online) is
-    exactly this shape, Spark-first.
+    TRAINED (not pinned) model: the exact-GD MLP of plans/mlq
+    ml_mlp_exact, fitted in-engine and served in-stream by
+    _stream_trained_scoring.  stream_seqnet_scoring proved pinned
+    integer weights on this path; here the oracle itself derives the
+    weights, so the DuckDB twin replays training AND serving
+    end-to-end.  The reference's deployment story (train offline in
+    Keras, score flows online) is exactly this shape, Spark-first.
 
     Scale: training is ml_mlp_exact's loop (one map-side aggregate
     per round); serving adds one stateless projection chain before
-    the ONE windowed streaming aggregation — state is bounded by
-    open windows x 2 classes and evicted by the watermark."""
-    from web_attack_detection_spark.plans.mlq import _mlpx_train
+    the ONE windowed streaming aggregation."""
+    from web_attack_detection_spark.plans.mlq import MLPX
 
-    model = _mlpx_train(spark, sf_dir, "gd", _return_model=True)
-    W, V, mean, sd = model["W"], model["V"], model["mean"], model["sd"]
-    H = len(W)
-
-    def agg_fn(s: DataFrame) -> DataFrame:
-        src = s.withWatermark("ts", "30 minutes") if s.isStreaming else s
-        xq = {
-            1: F.round(F.col("value") * 10000).cast("long"),
-            2: (F.col("user_id") % 100).cast("long"),
-            3: (F.col("event_id") % 100).cast("long"),
-        }
-        cur = src.select(
-            "ts",
-            *[
-                ((xq[i].cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                    f"z{i}"
-                )
-                for i in (1, 2, 3)
-            ],
-        )
-        cur = cur.select(
-            "ts",
-            *[
-                (
-                    F.lit(W[j - 1][0])
-                    + F.lit(W[j - 1][1]) * F.col("z1")
-                    + F.lit(W[j - 1][2]) * F.col("z2")
-                    + F.lit(W[j - 1][3]) * F.col("z3")
-                ).alias(f"pre{j}")
-                for j in range(1, H + 1)
-            ],
-        )
-        cur = cur.select(
-            "ts",
-            *[
-                F.greatest(F.least(F.col(f"pre{j}"), F.lit(1.0)), F.lit(-1.0)).alias(
-                    f"h{j}"
-                )
-                for j in range(1, H + 1)
-            ],
-        )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"h{j}")
-        scored = cur.select(
-            "ts", (m >= F.lit(0.0)).cast("long").alias("pred")
-        )
-        return (
-            scored.groupBy(F.window("ts", "1 hour"), "pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "pred",
-                "n",
-            )
-        )
-
-    return _replay(spark, sf_dir, agg_fn).orderBy("window_start", "pred")
+    return _stream_trained_scoring(spark, sf_dir, MLPX)
 
 
 # ---------------------------------------------------------------------------
@@ -1404,80 +1375,19 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
 )
 def stream_rnn_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recurrent twin of stream_mlp_trained_scoring: the exact-GD
-    sequence net of plans/rnnx.ml_rnn_exact is fitted in-engine
-    (weights bit-identical to the oracle's w_5 by trajectory
-    mirroring), then every arriving event is scored in-stream — the
-    3-step hard-tanh recurrence unrolled into whole-stage-codegen
-    column expressions (no Python worker, no second state store) —
-    and aggregated into per-(tumbling hour, predicted class) counts
-    under a 30-minute watermark.  One DuckDB oracle replays BOTH the
-    BPTT training and the streaming inference end to end, so the
-    reference's recurrent deployment story (train offline, score
-    flows online; models/rnn_model.py) is value-pinned across the
-    whole train->serve loop.
+    sequence net of plans/rnnx ml_rnn_exact, fitted in-engine and
+    served in-stream by _stream_trained_scoring (the 3-step hard-tanh
+    recurrence unrolled into codegen expressions).  One DuckDB oracle
+    replays BOTH the BPTT training and the streaming inference, so the
+    reference's recurrent deployment story (models/rnn_model.py) is
+    value-pinned across the whole train->serve loop.
 
     Scale: training is ml_rnn_exact's loop (one map-side aggregate
     per round); serving adds a stateless projection chain before ONE
-    windowed streaming aggregation — state bounded by open windows x
-    2 classes, evicted by the watermark."""
-    from web_attack_detection_spark.plans.rnnx import _RNNX_H, _RNNX_T, _rnnx_train
+    windowed streaming aggregation."""
+    from web_attack_detection_spark.plans.rnnx import RNNX
 
-    model = _rnnx_train(spark, sf_dir, _return_model=True)
-    B, U, R, V = model["B"], model["U"], model["R"], model["V"]
-    mean, sd = model["mean"], model["sd"]
-    H, T = _RNNX_H, _RNNX_T
-
-    def agg_fn(s: DataFrame) -> DataFrame:
-        src = s.withWatermark("ts", "30 minutes") if s.isStreaming else s
-        xq = {
-            1: F.round(F.col("value") * 10000).cast("long"),
-            2: (F.col("user_id") % 100).cast("long"),
-            3: (F.col("event_id") % 100).cast("long"),
-        }
-        cur = src.select(
-            "ts",
-            *[
-                ((xq[i].cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                    f"z{i}"
-                )
-                for i in (1, 2, 3)
-            ],
-        )
-        for t in range(1, T + 1):
-            pres = []
-            for j in range(1, H + 1):
-                e = F.lit(B[j - 1]) + F.lit(U[j - 1]) * F.col(f"z{t}")
-                if t > 1:
-                    for k in range(1, H + 1):
-                        e = e + F.lit(R[j - 1][k - 1]) * F.col(f"s{t - 1}_{k}")
-                pres.append(e.alias(f"pre{t}_{j}"))
-            cur = cur.select("*", *pres)
-            cur = cur.select(
-                "*",
-                *[
-                    F.greatest(
-                        F.least(F.col(f"pre{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"s{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"s3_{j}")
-        scored = cur.select("ts", (m >= F.lit(0.0)).cast("long").alias("pred"))
-        return (
-            scored.groupBy(F.window("ts", "1 hour"), "pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "pred",
-                "n",
-            )
-        )
-
-    return _replay(spark, sf_dir, agg_fn).orderBy("window_start", "pred")
+    return _stream_trained_scoring(spark, sf_dir, RNNX)
 
 
 # ---------------------------------------------------------------------------
@@ -1544,95 +1454,18 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     "then watermarked windowed scoring; oracle replays training AND scoring",
 )
 def stream_cnn_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The convolutional leg of the train->serve program — with this
-    query ALL THREE of the reference's architecture families (Dense,
-    recurrent, conv; models/{mlp,rnn,cnn}_model.py) are trained
-    in-engine AND served in-stream under one end-to-end DuckDB oracle
-    each.  The exact-GD conv net of plans/cnnx.ml_cnn_exact is fitted
-    (weights bit-identical to the oracle's w_6 by trajectory
-    mirroring), then every arriving event is scored in-stream — the
-    shared-kernel conv, hard-tanh, and max-pool unrolled into
-    whole-stage-codegen expressions — and aggregated into
-    per-(tumbling hour, predicted class) counts under a 30-minute
-    watermark.
+    """The convolutional leg of the train->serve program: the exact-GD
+    conv net of plans/cnnx ml_cnn_exact, fitted in-engine and served
+    in-stream by _stream_trained_scoring (shared-kernel conv,
+    hard-tanh and max-pool as codegen expressions), under one
+    end-to-end DuckDB oracle.
 
     Scale: training is ml_cnn_exact's loop (one map-side 18-aggregate
     scan per round); serving adds a stateless projection chain before
-    ONE windowed streaming aggregation — state bounded by open
-    windows x 2 classes, evicted by the watermark."""
-    from web_attack_detection_spark.plans.cnnx import (
-        _CNNX_C,
-        _CNNX_P,
-        _cnnx_train,
-    )
+    ONE windowed streaming aggregation."""
+    from web_attack_detection_spark.plans.cnnx import CNNX
 
-    model = _cnnx_train(spark, sf_dir, _return_model=True)
-    B, K0, K1, V = model["B"], model["K0"], model["K1"], model["V"]
-    mean, sd = model["mean"], model["sd"]
-    C, P = _CNNX_C, _CNNX_P
-
-    def agg_fn(s: DataFrame) -> DataFrame:
-        src = s.withWatermark("ts", "30 minutes") if s.isStreaming else s
-        xq = {
-            1: F.round(F.col("value") * 10000).cast("long"),
-            2: (F.col("user_id") % 100).cast("long"),
-            3: (F.col("event_id") % 100).cast("long"),
-        }
-        cur = src.select(
-            "ts",
-            *[
-                ((xq[i].cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                    f"z{i}"
-                )
-                for i in (1, 2, 3)
-            ],
-        )
-        cur = cur.select(
-            "*",
-            *[
-                (
-                    F.lit(B[c - 1])
-                    + F.lit(K0[c - 1]) * F.col(f"z{t}")
-                    + F.lit(K1[c - 1]) * F.col(f"z{t + 1}")
-                ).alias(f"pre{t}_{c}")
-                for t in range(1, P + 1)
-                for c in range(1, C + 1)
-            ],
-        )
-        cur = cur.select(
-            "*",
-            *[
-                F.greatest(
-                    F.least(F.col(f"pre{t}_{c}"), F.lit(1.0)), F.lit(-1.0)
-                ).alias(f"a{t}_{c}")
-                for t in range(1, P + 1)
-                for c in range(1, C + 1)
-            ],
-        )
-        cur = cur.select(
-            "*",
-            *[
-                F.greatest(F.col(f"a1_{c}"), F.col(f"a2_{c}")).alias(f"p{c}")
-                for c in range(1, C + 1)
-            ],
-        )
-        m = F.lit(V[0])
-        for c in range(1, C + 1):
-            m = m + F.lit(V[c]) * F.col(f"p{c}")
-        scored = cur.select("ts", (m >= F.lit(0.0)).cast("long").alias("pred"))
-        return (
-            scored.groupBy(F.window("ts", "1 hour"), "pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "pred",
-                "n",
-            )
-        )
-
-    return _replay(spark, sf_dir, agg_fn).orderBy("window_start", "pred")
+    return _stream_trained_scoring(spark, sf_dir, CNNX)
 
 
 # ---------------------------------------------------------------------------
@@ -1683,126 +1516,19 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
 )
 def stream_lstm_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSTM leg closes the 4x4: ALL FOUR of the reference's model
-    families (models/{mlp,rnn,cnn,lstm}_model.py) are now trained
+    families (models/{mlp,rnn,cnn,lstm}_model.py) are trained
     in-engine AND served in-stream, each under one end-to-end DuckDB
-    oracle.  The exact-GD LSTM of plans/lstmx.ml_lstm_exact is fitted
-    (weights bit-identical to the oracle's w_4 by trajectory
-    mirroring), then every arriving event runs the full gated cell —
-    hard-sigmoid i/f/o gates, hard-tanh candidate, cell-state scan —
-    as whole-stage-codegen column expressions, and the predictions
-    aggregate into per-(tumbling hour, class) counts under a
-    30-minute watermark.
+    oracle.  The exact-GD LSTM of plans/lstmx ml_lstm_exact is fitted
+    in-engine and served by _stream_trained_scoring: hard-sigmoid
+    i/f/o gates, hard-tanh candidate and the cell-state scan as
+    codegen expressions.
 
     Scale: training is ml_lstm_exact's loop (one map-side
     36-aggregate scan per round); serving adds a stateless projection
-    chain before ONE windowed streaming aggregation — state bounded
-    by open windows x 2 classes, evicted by the watermark."""
-    from web_attack_detection_spark.plans.lstmx import (
-        _GATES,
-        _LSTMX_H,
-        _LSTMX_T,
-        _lstmx_train,
-    )
+    chain before ONE windowed streaming aggregation."""
+    from web_attack_detection_spark.plans.lstmx import LSTMX
 
-    model = _lstmx_train(spark, sf_dir, _return_model=True)
-    W, V = model["W"], model["V"]
-    mean, sd = model["mean"], model["sd"]
-    H, T = _LSTMX_H, _LSTMX_T
-
-    def agg_fn(s: DataFrame) -> DataFrame:
-        src = s.withWatermark("ts", "30 minutes") if s.isStreaming else s
-        xq = {
-            1: F.round(F.col("value") * 10000).cast("long"),
-            2: (F.col("user_id") % 100).cast("long"),
-            3: (F.col("event_id") % 100).cast("long"),
-        }
-        cur = src.select(
-            "ts",
-            *[
-                ((xq[i].cast("double") - F.lit(mean[i])) / F.lit(sd[i])).alias(
-                    f"z{i}"
-                )
-                for i in (1, 2, 3)
-            ],
-        )
-
-        def hsig_col(x):
-            return F.greatest(
-                F.least(F.lit(0.2) * x + F.lit(0.5), F.lit(1.0)), F.lit(0.0)
-            )
-
-        for t in range(1, T + 1):
-            pres = []
-            for g in _GATES:
-                for j in range(1, H + 1):
-                    e = F.lit(W[g][j - 1][0]) + F.lit(W[g][j - 1][1]) * F.col(
-                        f"z{t}"
-                    )
-                    if t > 1:
-                        for k in range(1, H + 1):
-                            e = e + F.lit(W[g][j - 1][1 + k]) * F.col(
-                                f"h{t - 1}_{k}"
-                            )
-                    pres.append(e.alias(f"pre{g}{t}_{j}"))
-            cur = cur.select("*", *pres)
-            acts = []
-            for j in range(1, H + 1):
-                acts.append(hsig_col(F.col(f"prei{t}_{j}")).alias(f"gi{t}_{j}"))
-                acts.append(hsig_col(F.col(f"pref{t}_{j}")).alias(f"gf{t}_{j}"))
-                acts.append(hsig_col(F.col(f"preo{t}_{j}")).alias(f"go{t}_{j}"))
-                acts.append(
-                    F.greatest(
-                        F.least(F.col(f"preg{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"gg{t}_{j}")
-                )
-            cur = cur.select("*", *acts)
-            cells = []
-            for j in range(1, H + 1):
-                if t == 1:
-                    cells.append(
-                        (F.col(f"gi1_{j}") * F.col(f"gg1_{j}")).alias(f"c1_{j}")
-                    )
-                else:
-                    cells.append(
-                        (
-                            F.col(f"gf{t}_{j}") * F.col(f"c{t - 1}_{j}")
-                            + F.col(f"gi{t}_{j}") * F.col(f"gg{t}_{j}")
-                        ).alias(f"c{t}_{j}")
-                    )
-            cur = cur.select("*", *cells)
-            cur = cur.select(
-                "*",
-                *[
-                    F.greatest(
-                        F.least(F.col(f"c{t}_{j}"), F.lit(1.0)), F.lit(-1.0)
-                    ).alias(f"th{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-            cur = cur.select(
-                "*",
-                *[
-                    (F.col(f"go{t}_{j}") * F.col(f"th{t}_{j}")).alias(f"h{t}_{j}")
-                    for j in range(1, H + 1)
-                ],
-            )
-        m = F.lit(V[0])
-        for j in range(1, H + 1):
-            m = m + F.lit(V[j]) * F.col(f"h3_{j}")
-        scored = cur.select("ts", (m >= F.lit(0.0)).cast("long").alias("pred"))
-        return (
-            scored.groupBy(F.window("ts", "1 hour"), "pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "pred",
-                "n",
-            )
-        )
-
-    return _replay(spark, sf_dir, agg_fn).orderBy("window_start", "pred")
+    return _stream_trained_scoring(spark, sf_dir, LSTMX)
 
 
 # ---------------------------------------------------------------------------
