@@ -21,6 +21,10 @@ Replication scheme (structure-preserving, output-linear):
   both shifts divisible by every modulus the queries key on (%4
   splits, %100 features, %16 sequence values), so per-copy semantics
   are identical and the user population grows 10x.
+- ``orders``: o_orderkey shifted by 15,015,000 per copy — a multiple
+  of 3, 5, 7, 11 and 13, the moduli the change-data queries plant
+  updates/deletes on — so the keyspace grows 10x with identical
+  per-copy change sets.
 
 Copy 0 is byte-identical to the source, so the 1x relation is a
 strict subset of the 10x one.
@@ -63,11 +67,17 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 from pyspark.sql import functions as F  # noqa: E402
 
 # the top cost families (dedup, ANN, exact trainers, deep trainer,
-# tokenizer trainers, ref battery, corpus pipeline) — every entry
-# reads only documents/embeddings/events, the three replicated tables
+# tokenizer trainers, ref battery, corpus pipeline, change data) —
+# every entry reads only documents/embeddings/events/orders, the four
+# replicated tables
 QUERIES_10X = [
     "dedup_exact",
+    "dedup_simhash",
     "dedup_minhash_lsh",
+    "dedup_incremental_indexed",  # probe against the stored shingle index
+    "dedup_index_merge",  # index compaction + post-merge serving
+    "rel_cdc_apply",  # last-op-wins over the bucketed changelog
+    "rel_snapshot_diff",  # shuffle-free full outer join on bucketed orders
     "ml_minhash_lsh_join",
     "sim_ivf_topk",
     "sim_pq_adc_topk",
@@ -189,6 +199,15 @@ def materialize(spark, src: str, dst: str, copies: int) -> None:
     for p in parts[1:]:
         v = v.unionByName(p)
     v.write.mode("overwrite").parquet(f"{dst}/events.parquet")
+
+    o = spark.read.parquet(f"{src}/orders.parquet")
+    parts = [o]
+    for c in range(1, copies):
+        parts.append(o.withColumn("o_orderkey", F.col("o_orderkey") + c * 15_015_000))
+    r = parts[0]
+    for p in parts[1:]:
+        r = r.unionByName(p)
+    r.write.mode("overwrite").parquet(f"{dst}/orders.parquet")
 
 
 def materialize_skew(spark, uniform_dir: str, dst: str) -> None:
@@ -312,7 +331,12 @@ def main() -> None:
     for name in queries_10x:
         fn = _resolve(name)
         entry: dict = {}
+        setup = QUERIES[name].setup if name in QUERIES else None
         for tag, d in (("t1", args.sf_dir), (f"t{args.copies}", args.scale_dir)):
+            if setup is not None:  # declared input fixture: untimed, as in bench.py
+                t = time.perf_counter()
+                setup(spark, d)
+                entry[f"{tag}_setup"] = round(time.perf_counter() - t, 2)
             load0 = round(os.getloadavg()[0], 2)
             t = time.perf_counter()
             n = fn(spark, d).count()

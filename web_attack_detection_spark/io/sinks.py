@@ -109,64 +109,52 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 # accumulation to ONE directory per logical input (the pre-write
 # drop+rmtree overwrites it in place), and an exit-time rmtree would
 # both defeat cross-process reuse and race a concurrent process still
-# reading the directory.
+# reading the directory. io/fixtures.fixture_tables supplies the
+# content-keyed name.
+
+
+def _drop_stable(spark: SparkSession, name: str) -> None:
+    """Drop the named table AND its warehouse directory: a fresh
+    session's in-memory catalog does not know a table even when its
+    location exists on disk, so saveAsTable would refuse the path."""
+    import os
+    import shutil
+
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    shutil.rmtree(os.path.join(wh.removeprefix("file:"), name.lower()), ignore_errors=True)
 
 
 def stable_bucketed_table(
     spark: SparkSession,
     df: DataFrame,
-    base: str,
-    content_key: str,
+    name: str,
     bucket_col: str,
     n_buckets: int = 8,
     sort_col: str | None = None,
-) -> str:
-    """Write ``df`` as a bucketed catalog table under a CONTENT-KEYED
-    stable name (``{base}_{md5(content_key)[:8]}``): the same logical
-    input always maps to the same warehouse location, so repeated
+) -> None:
+    """Write ``df`` as the bucketed catalog table ``name``, a
+    CONTENT-KEYED stable name (io/fixtures.fixture_tables): the same
+    logical input always maps to the same warehouse location, so repeated
     bench/test/audit processes overwrite ONE directory instead of
-    accumulating pid-unique copies. A fresh session's in-memory
-    catalog does not know a table even when its location exists on
-    disk, so the drop+rmtree before saveAsTable is required. Returns
-    the table name."""
-    import hashlib
-    import os
-    import shutil
-
-    h = hashlib.md5(content_key.encode()).hexdigest()[:8]
-    name = f"{base}_{h}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(wh.removeprefix("file:"), name.lower())
-    shutil.rmtree(loc, ignore_errors=True)
+    accumulating pid-unique copies."""
+    _drop_stable(spark, name)
     write_bucketed(df, name, bucket_col, n_buckets=n_buckets, sort_col=sort_col)
-    return name
 
 
 def stable_partitioned_table(
     spark: SparkSession,
     df: DataFrame,
-    base: str,
-    content_key: str,
+    name: str,
     partition_cols: list[str],
-) -> str:
+) -> None:
     """Partitioned sibling of :func:`stable_bucketed_table`: a
     content-keyed catalog table partitioned by ``partition_cols`` —
     the layout whose directory structure IS the index (queries
     filtering/joining on the partition column read only matching
     directories, statically or via dynamic partition pruning).
     Same content-keyed overwrite contract."""
-    import hashlib
-    import os
-    import shutil
-
-    h = hashlib.md5(content_key.encode()).hexdigest()[:8]
-    name = f"{base}_{h}"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(wh.removeprefix("file:"), name.lower())
-    shutil.rmtree(loc, ignore_errors=True)
+    _drop_stable(spark, name)
     df.write.mode("overwrite").partitionBy(*partition_cols).format(
         "parquet"
     ).saveAsTable(name)
-    return name

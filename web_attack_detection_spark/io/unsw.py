@@ -27,9 +27,9 @@ reference's four headerless CSVs:
   file, matching the reference's train-on-{1,3,4} / test-on-2.
 
 Scale note: the fixture manufacture (one CSV write per partition file,
-once per process × sf_dir) is test transport, not an operator — a real
-deployment reads the archives it already has, one scan partition per
-file. The LOADERS are the operators under test: S1 CSV scan with
+once per events content — io/fixtures.py) is test transport, not an
+operator — a real deployment reads the archives it already has, one
+scan partition per file. The LOADERS are the operators under test: S1 CSV scan with
 explicit schema, S2 multi-file ingest, and the header-quirk
 reproduction.
 """
@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -204,56 +203,24 @@ UNSW_SQL_DERIVE = """
 """
 
 
-_FIXTURE_DIRS: dict[tuple, str] = {}
-# (sf_dir, load_table function object) -> events row count; the count
-# job (~0.2 s local floor) runs once per distinct loader, not once per
-# UNSW query per bench rep (ADVICE r4) — a probe that patches
-# ``load_table`` presents a NEW function object, so its fixture still
-# re-keys on the fresh row count
-_FIXTURE_COUNTS: dict[tuple, int] = {}
-
-
 def unsw_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write the 4 headerless partition CSVs once per (process, input)
-    and return the directory holding ``UNSW-NB15_{1..4}.csv``.
+    """The directory holding the 4 headerless partition CSVs
+    ``UNSW-NB15_{1..4}.csv`` synthesized from ``events``: a
+    content-keyed directory fixture (io/fixtures.py), written once
+    per events content and reused by every later call and process."""
+    from web_attack_detection_spark.io.fixtures import fixture_dir
 
-    Keyed on (sf_dir, events row count) — consistent with the
-    bucketed-table caches in plans/relational10.py — so scale probes
-    that patch ``load_table`` get a FRESH fixture instead of silently
-    replaying the stale unpatched one; the mkdtemp dirs are removed at
-    process exit (ADVICE r3). The row count itself is cached per
-    (sf_dir, loader identity) so cache hits cost zero Spark jobs."""
-    from web_attack_detection_spark.io.sources import load_table
+    def build(d: str) -> None:
+        full = synthesize_unsw(spark, sf_dir)
+        for file_no in range(1, 5):
+            part = full.filter(F.col("__file") == file_no - 1).drop("__file")
+            tmp = os.path.join(d, f"__w{file_no}")
+            part.coalesce(1).write.option("header", "false").mode("overwrite").csv(tmp)
+            csv = next(p for p in os.listdir(tmp) if p.endswith(".csv"))
+            shutil.move(os.path.join(tmp, csv), os.path.join(d, f"UNSW-NB15_{file_no}.csv"))
+            shutil.rmtree(tmp)
 
-    count_key = (sf_dir, load_table)
-    n_events = _FIXTURE_COUNTS.get(count_key)
-    if n_events is None:
-        n_events = load_table(spark, sf_dir, "events").count()
-        _FIXTURE_COUNTS[count_key] = n_events
-    key = (sf_dir, n_events)
-    d = _FIXTURE_DIRS.get(key)
-    if d is not None:
-        return d
-    d = tempfile.mkdtemp(prefix="unsw_")
-    if not _FIXTURE_DIRS:
-        import atexit
-
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True)
-                for p in _FIXTURE_DIRS.values()
-            ]
-        )
-    full = synthesize_unsw(spark, sf_dir)
-    for file_no in range(1, 5):
-        part = full.filter(F.col("__file") == file_no - 1).drop("__file")
-        tmp = os.path.join(d, f"__w{file_no}")
-        part.coalesce(1).write.option("header", "false").mode("overwrite").csv(tmp)
-        csv = next(p for p in os.listdir(tmp) if p.endswith(".csv"))
-        shutil.move(os.path.join(tmp, csv), os.path.join(d, f"UNSW-NB15_{file_no}.csv"))
-        shutil.rmtree(tmp)
-    _FIXTURE_DIRS[key] = d
-    return d
+    return fixture_dir("unsw", sf_dir, ["events"], build)
 
 
 def load_unsw(

@@ -686,8 +686,6 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental ingest against a PERSISTENT stored index (VERDICT r3 #6)
 # ---------------------------------------------------------------------------
 
-_CORPUS_INDEX: dict[tuple, tuple[str, str]] = {}
-
 
 def _corpus_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The persistent dedup index: the existing corpus pre-shingled and
@@ -706,35 +704,35 @@ def _corpus_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     in tests/test_explain.py). The bucketed layout is what keeps the
     shuffle off the index for the remaining lifecycle too: merging a
     committed batch back in, compacting, or index-vs-index dedup all
-    join/group on the bucket key straight off storage. Cached per
-    (sf_dir, corpus row count); content-keyed stable names
-    overwritten in place via io/sinks.stable_bucketed_table (ADVICE r3/r4)."""
+    join/group on the bucket key straight off storage. A content-keyed
+    catalog fixture (io/fixtures.fixture_tables): built once per
+    documents content and session, overwritten in place (ADVICE r3/r4)."""
+    from web_attack_detection_spark.io.fixtures import fixture_tables
     from web_attack_detection_spark.io.sinks import stable_bucketed_table
     from web_attack_detection_spark.operators.dedup import shingles
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    key = (sf_dir, corpus.count())
-    cached = _CORPUS_INDEX.get(key)
-    if cached is not None:
-        return cached
-    c_sh = shingles(corpus, "text", "doc_id", n=3).withColumnsRenamed({"id": "c_id"})
-    c_idx = c_sh.join(
-        c_sh.groupBy("c_id").agg(F.count(F.lit(1)).alias("c_sz")), "c_id"
+    def build(sh_name: str, tx_name: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        corpus = docs.filter(F.col("doc_id") % 5 != 0)
+        c_sh = shingles(corpus, "text", "doc_id", n=3).withColumnsRenamed(
+            {"id": "c_id"}
+        )
+        c_idx = c_sh.join(
+            c_sh.groupBy("c_id").agg(F.count(F.lit(1)).alias("c_sz")), "c_id"
+        )
+        stable_bucketed_table(spark, c_idx, sh_name, "shingle")
+        stable_bucketed_table(spark, corpus.select("text"), tx_name, "text")
+
+    return fixture_tables(
+        spark, sf_dir, ["documents"], ("docsh_idx", "doctext_idx"), build
     )
-    ck = f"{sf_dir}|{key[1]}"
-    sh_name = stable_bucketed_table(spark, c_idx, "docsh_idx", ck, "shingle")
-    tx_name = stable_bucketed_table(
-        spark, corpus.select("text"), "doctext_idx", ck, "text"
-    )
-    _CORPUS_INDEX[key] = (sh_name, tx_name)
-    return _CORPUS_INDEX[key]
 
 
 @register(
     "dedup_incremental_indexed",
     _INCR_ORACLE,
     doc="incremental ingest dedup against a STORED bucketed shingle index",
+    setup=_corpus_index,
 )
 def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_incremental_ingest`` semantics against the PERSISTENT
@@ -970,8 +968,6 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # remaining lifecycle stage)
 # ---------------------------------------------------------------------------
 
-_MERGED_INDEX: dict[tuple, tuple[str, str]] = {}
-
 
 def _merged_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The compaction step of the persistent-index lifecycle: shingle
@@ -981,36 +977,32 @@ def _merged_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     bucketed tables. The merge consumes the old index map-only (the
     bucketed layout is preserved by unionByName + re-bucketed write),
     and its cost is |old index| + |delta| — one linear pass, the same
-    shape a 100 TB index compaction runs. Cached per (sf_dir,
-    committed row count) like ``_corpus_index``."""
+    shape a 100 TB index compaction runs. A catalog fixture keyed on
+    the documents content like ``_corpus_index``."""
+    from web_attack_detection_spark.io.fixtures import fixture_tables
     from web_attack_detection_spark.io.sinks import stable_bucketed_table
     from web_attack_detection_spark.operators.dedup import shingles
 
-    sh_name, tx_name = _corpus_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    committed = docs.filter(F.col("doc_id") % 10 == 5)
-    # cache key folds the CONTENT-KEYED corpus-index table names too
-    # (ADVICE r5): a patched loader changing corpus content without
-    # changing the committed count must not replay a stale merge
-    key = (sf_dir, committed.count(), sh_name, tx_name)
-    cached = _MERGED_INDEX.get(key)
-    if cached is not None:
-        return cached
-    a_sh = shingles(committed, "text", "doc_id", n=3).withColumnsRenamed(
-        {"id": "c_id"}
+    def build(mrg_sh: str, mrg_tx: str) -> None:
+        sh_name, tx_name = _corpus_index(spark, sf_dir)
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        committed = docs.filter(F.col("doc_id") % 10 == 5)
+        a_sh = shingles(committed, "text", "doc_id", n=3).withColumnsRenamed(
+            {"id": "c_id"}
+        )
+        a_idx = a_sh.join(
+            a_sh.groupBy("c_id").agg(F.count(F.lit(1)).alias("c_sz")), "c_id"
+        )
+        merged_sh = spark.table(sh_name).unionByName(
+            a_idx.select(spark.table(sh_name).columns)
+        )
+        merged_tx = spark.table(tx_name).unionByName(committed.select("text"))
+        stable_bucketed_table(spark, merged_sh, mrg_sh, "shingle")
+        stable_bucketed_table(spark, merged_tx, mrg_tx, "text")
+
+    return fixture_tables(
+        spark, sf_dir, ["documents"], ("docsh_mrg", "doctext_mrg"), build
     )
-    a_idx = a_sh.join(
-        a_sh.groupBy("c_id").agg(F.count(F.lit(1)).alias("c_sz")), "c_id"
-    )
-    merged_sh = spark.table(sh_name).unionByName(
-        a_idx.select(spark.table(sh_name).columns)
-    )
-    merged_tx = spark.table(tx_name).unionByName(committed.select("text"))
-    ck = f"{sf_dir}|merged|{key[1]}"
-    m_sh = stable_bucketed_table(spark, merged_sh, "docsh_mrg", ck, "shingle")
-    m_tx = stable_bucketed_table(spark, merged_tx, "doctext_mrg", ck, "text")
-    _MERGED_INDEX[key] = (m_sh, m_tx)
-    return _MERGED_INDEX[key]
 
 
 _MERGE_ORACLE = """
@@ -1064,6 +1056,7 @@ LEFT JOIN near n ON b.doc_id = n.b_id
     "dedup_index_merge",
     _MERGE_ORACLE,
     doc="index maintenance: merge a committed batch into the stored index, serve the next batch from the MERGED tables",
+    setup=_merged_index,
 )
 def dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stage that completes the persistent-index lifecycle

@@ -73,6 +73,7 @@ FROM scaled GROUP BY label
     "ref_unsw_prepared",
     _UNSW_PREPARED_ORACLE,
     doc="reference-shaped UNSW CSV workload: 4-file ingest -> fit-on-train pipeline, prepared test split checked per class",
+    setup=unsw_fixture_dir,
 )
 def ref_unsw_prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's real preparation (``data_preprocessing.py``) on
@@ -119,6 +120,7 @@ SELECT 'numeric_clean', 42, TRUE
     "ref_unsw_classify",
     _UNSW_CLASSIFY_ORACLE,
     doc="reference dtype-whitelist classification on the UNSW shape, incl. the label-leak count",
+    setup=unsw_fixture_dir,
 )
 def ref_unsw_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R3 on the reference's real schema: the integer/double whitelist
@@ -166,6 +168,7 @@ FROM logits GROUP BY 1
     "ref_unsw_stream_score",
     _UNSW_STREAM_ORACLE,
     doc="streaming attack detection over the UNSW CSV shape: CSV file-source -> map-only scoring -> class counts, oracle-checked",
+    setup=unsw_fixture_dir,
 )
 def ref_unsw_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's PURPOSE — web attack detection — run the way it
@@ -257,6 +260,7 @@ FROM s CROSS JOIN (
     "ref_unsw_battery_summary",
     _BATTERY_SUMMARY_ORACLE,
     doc="battery prep-stage contract: per (prep, split) row counts, feature widths, label distributions — full oracle",
+    setup=unsw_fixture_dir,
 )
 def ref_unsw_battery_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DETERMINISTIC half of ``ref_unsw_battery`` split out under a
@@ -330,6 +334,7 @@ def ref_unsw_battery_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ref_unsw_battery",
     None,
     doc="runner.run_pipeline over the UNSW-shaped CSVs: the reference's whole main() on its real input (rows-only)",
+    setup=unsw_fixture_dir,
 )
 def ref_unsw_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7 on the reference's real workload shape: the full program —

@@ -27,14 +27,23 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None → driver does a rows-only check
     doc: str = ""
+    # the idempotent input fixture ``fn`` reads (io/fixtures.py); ``fn``
+    # calls it too, so running it first only moves its one-time cost
+    # out of the query. The return value is ignored.
+    setup: Callable[[SparkSession, str], object] | None = None
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(
+    name: str,
+    oracle: str | None = None,
+    doc: str = "",
+    setup: Callable[[SparkSession, str], object] | None = None,
+):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
+        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc, setup=setup)
         return fn
 
     return deco

@@ -245,49 +245,31 @@ def rel_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshot diff: added / removed / changed between two table versions
 # ---------------------------------------------------------------------------
 
-_BUCKETED_ORDERS: dict[tuple, str] = {}
 
+def _orders_bucketed(spark: SparkSession, sf_dir: str) -> str:
+    """Orders projected to (key, status, price) as a catalog table
+    bucketed+sorted on ``o_orderkey``, a content-keyed catalog fixture
+    (io/fixtures.fixture_tables) — the declared setup of
+    ``rel_snapshot_diff``. Reading it back gives both sides of a
+    key-join hash-distribution for free: the snapshot-diff full outer
+    join runs with ZERO Exchange (asserted in tests/test_explain.py).
+    This is io/sinks.write_bucketed doing its actual job — at 100 TB
+    the change-data tables are stored bucketed on the key precisely so
+    every diff/apply skips the shuffle.
 
-def _stable_table(spark, df, base: str, sf_dir: str, n_rows: int,
-                  bucket_col: str, sort_col: str | None = None):
-    """Content-keyed stable bucketed table (ADVICE r3): same logical
-    input → same warehouse location, overwritten rather than
-    accumulated, removed at process exit. Delegates to
-    io/sinks.stable_bucketed_table."""
+    With the setup run first (bench.py, tools/plan_audit.py), building
+    the query executes nothing."""
+    from web_attack_detection_spark.io.fixtures import fixture_tables
     from web_attack_detection_spark.io.sinks import stable_bucketed_table
 
-    return stable_bucketed_table(
-        spark, df, base, f"{sf_dir}|{n_rows}", bucket_col, sort_col=sort_col
-    )
-
-
-def _orders_bucketed(spark: SparkSession, sf_dir: str):
-    """Orders projected to (key, status, price) as a catalog table
-    bucketed+sorted on ``o_orderkey`` — written once per distinct
-    input (keyed by sf_dir + row count so scale probes that patch
-    ``load_table`` get their own layout). Reading it back gives both
-    sides of a key-join hash-distribution for free: the snapshot-diff
-    full outer join runs with ZERO Exchange (asserted in
-    tests/test_explain.py). This is io/sinks.write_bucketed doing its
-    actual job — at 100 TB the change-data tables are stored bucketed
-    on the key precisely so every diff/apply skips the shuffle.
-
-    NOTE this makes ``rel_snapshot_diff`` eager at query-construction
-    time (one count job + the one-time bucketed write per process) —
-    it is in tools/plan_audit.py's executing skip list for that reason.
-    """
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    key = (sf_dir, o.count())
-    name = _BUCKETED_ORDERS.get(key)
-    if name is None:
-        name = _stable_table(
-            spark, o, "orders_bkt_r10", sf_dir, key[1],
-            "o_orderkey", sort_col="o_orderkey",
+    def build(name: str) -> None:
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        _BUCKETED_ORDERS[key] = name
-    return spark.table(name)
+        stable_bucketed_table(spark, o, name, "o_orderkey", sort_col="o_orderkey")
+
+    return fixture_tables(spark, sf_dir, ["orders"], ("orders_bkt_r10",), build)[0]
+
 
 _SNAPDIFF_ORACLE = """
 WITH v1 AS (
@@ -317,6 +299,7 @@ GROUP BY 1
     "rel_snapshot_diff",
     _SNAPDIFF_ORACLE,
     doc="table-version diff: added/removed/changed via one full outer join",
+    setup=_orders_bucketed,
 )
 def rel_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reconcile two versions of a table (derived here by planted
@@ -325,11 +308,11 @@ def rel_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ZERO shuffle: both versions read from the orders layout
     bucketed on the key (``_orders_bucketed``), so the join consumes
     the storage distribution directly (VERDICT r2 #6; Exchange-free
-    plan asserted in tests/test_explain.py, ≤2× wall at a 10× keyspace
-    in tools/scale_probe_relational). Row-hash comparison (xxhash64
+    plan asserted in tests/test_explain.py; 1×/10× keyspace ratio in
+    tools/bench_scale.py). Row-hash comparison (xxhash64
     over all columns) replaces the per-column predicate when schemas
     are wide — same plan."""
-    o = _orders_bucketed(spark, sf_dir)
+    o = spark.table(_orders_bucketed(spark, sf_dir))
     v1 = o.filter(F.col("o_orderkey") % 7 != 0).select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderstatus").alias("st"),
@@ -369,27 +352,24 @@ def rel_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC changelog apply: replay an I/U/D operation log into final state
 # ---------------------------------------------------------------------------
 
-_CDC_LOGS: dict[tuple, str] = {}
 
-
-def _cdc_log_bucketed(spark: SparkSession, sf_dir: str):
+def _cdc_log_bucketed(spark: SparkSession, sf_dir: str) -> str:
     """The synthetic I/U/D changelog (inserts for every order, updates
     on every 3rd key, deletes on every 13th) LANDED as a catalog table
     bucketed on the key — the ingest-side layout a real CDC pipeline
     uses: the one unavoidable shuffle of a last-op-wins apply moves to
     WRITE time, paid once, and every downstream apply/compaction reads
     the key distribution straight off storage (groupBy(k) with zero
-    Exchange — asserted in tests/test_explain.py). Keyed by sf_dir +
-    source row count so scale probes that patch ``load_table`` get
-    their own layout.
+    Exchange — asserted in tests/test_explain.py). A content-keyed
+    catalog fixture, the declared setup of ``rel_cdc_apply``; with it
+    run first, building the query executes nothing."""
+    from web_attack_detection_spark.io.fixtures import fixture_tables
+    from web_attack_detection_spark.io.sinks import stable_bucketed_table
 
-    NOTE this makes ``rel_cdc_apply`` eager at query-construction time
-    — it is in tools/plan_audit.py's executing skip list."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(F.col("o_orderkey").alias("k"), F.col("o_totalprice"))
-    key = (sf_dir, o.count())
-    name = _CDC_LOGS.get(key)
-    if name is None:
+    def build(name: str) -> None:
+        base = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("k"), F.col("o_totalprice")
+        )
         log = (
             base.select("k", F.lit(1).alias("seq"), F.lit("I").alias("op"),
                         F.col("o_totalprice").alias("val"))
@@ -408,9 +388,10 @@ def _cdc_log_bucketed(spark: SparkSession, sf_dir: str):
                 )
             )
         )
-        name = _stable_table(spark, log, "cdc_log", sf_dir, key[1], "k")
-        _CDC_LOGS[key] = name
-    return spark.table(name)
+        stable_bucketed_table(spark, log, name, "k")
+
+    return fixture_tables(spark, sf_dir, ["orders"], ("cdc_log",), build)[0]
+
 
 _CDC_ORACLE = """
 WITH log AS (
@@ -437,6 +418,7 @@ FROM latest WHERE rn = 1 AND op <> 'D'
     "rel_cdc_apply",
     _CDC_ORACLE,
     doc="CDC changelog apply: last-op-wins per key, deletes drop rows",
+    setup=_cdc_log_bucketed,
 )
 def rel_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay a Debezium-style insert/update/delete changelog into the
@@ -448,10 +430,11 @@ def rel_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation collapses each map partition to ≤ one record per key
     BEFORE the shuffle and nothing ever sorts, where the window must
     shuffle the full changelog and sort every partition — measured
-    2.5× → ≤2× wall at a 10× keyspace (tools/scale_probe_relational).
+    2.5× → ≤2× wall at a 10× keyspace (now tracked by
+    tools/bench_scale.py).
     Updates planted on every 3rd key, deletes on every 13th, totals
     integer-scaled and engine-exact."""
-    log = _cdc_log_bucketed(spark, sf_dir)
+    log = spark.table(_cdc_log_bucketed(spark, sf_dir))
     live = (
         log.groupBy("k")
         .agg(F.max_by(F.struct("op", "val"), "seq").alias("last"))

@@ -444,8 +444,6 @@ def sim_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (round 4 — completes the persistent-index story sim_ivf_topk documents)
 # ---------------------------------------------------------------------------
 
-_IVF_STORE: dict[tuple, tuple[str, str]] = {}
-
 
 def _ivf_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build the IVF index ONCE and persist it the way a deployment
@@ -454,31 +452,32 @@ def _ivf_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the 16 centroids as a tiny sibling table. Query-time probes then
     read only the probed cells' directories (dynamic partition
     pruning via the broadcast probe join; asserted in
-    tests/test_explain.py). Cached per (sf_dir, corpus row count);
-    content-keyed stable names, overwritten in place (ADVICE r3/r4)."""
+    tests/test_explain.py). A content-keyed catalog fixture
+    (io/fixtures.fixture_tables): built once per embeddings content
+    and session, overwritten in place (ADVICE r3/r4)."""
+    from web_attack_detection_spark.io.fixtures import fixture_tables
     from web_attack_detection_spark.io.sinks import (
         stable_bucketed_table,
         stable_partitioned_table,
     )
     from web_attack_detection_spark.operators.similarity import ivf_assign
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, emb.count())
-    cached = _IVF_STORE.get(key)
-    if cached is not None:
-        return cached
-    centroids, assigned = ivf_assign(emb, k_centroids=16)
-    ck = f"{sf_dir}|{key[1]}"
-    a_name = stable_partitioned_table(spark, assigned, "ivf_cells", ck, ["cell"])
-    c_name = stable_bucketed_table(spark, centroids, "ivf_cents", ck, "cell")
-    _IVF_STORE[key] = (a_name, c_name)
-    return _IVF_STORE[key]
+    def build(cells: str, cents: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        centroids, assigned = ivf_assign(emb, k_centroids=16)
+        stable_partitioned_table(spark, assigned, cells, ["cell"])
+        stable_bucketed_table(spark, centroids, cents, "cell")
+
+    return fixture_tables(
+        spark, sf_dir, ["embeddings"], ("ivf_cells", "ivf_cents"), build
+    )
 
 
 @register(
     "sim_ivf_indexed",
     _ivf_oracle(),
     doc="ANN top-k against a STORED cell-partitioned IVF index (DPP-pruned probes), FULL oracle",
+    setup=_ivf_store,
 )
 def sim_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``sim_ivf_topk`` semantics served from the PERSISTED index

@@ -10,12 +10,12 @@ never exceeded on ordered replay), the DuckDB twin is plain batch SQL
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from web_attack_detection_spark.io.fixtures import fixture_dir
 from web_attack_detection_spark.io.sources import load_table
 from web_attack_detection_spark.plans.registry import register, sql_money_sum
 from web_attack_detection_spark.streaming.windows import (
@@ -25,8 +25,6 @@ from web_attack_detection_spark.streaming.windows import (
     windowed_event_counts,
 )
 
-
-_REPLAY_DIRS: dict[str, str] = {}
 
 # Stateful-stream shuffle partitions: the conf at query START fixes the
 # state-store partition count for the query's lifetime, and every
@@ -55,9 +53,9 @@ class _stream_conf:
 
 
 def _replay_input(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events fixture once per (process, sf_dir) as the
-    stream replay input — the input is immutable, so every streaming
-    query replays the same files instead of re-writing them.
+    """The events fixture as stream replay input: a content-keyed
+    directory fixture (io/fixtures.py) that every streaming query on
+    the same events content replays instead of re-writing it.
 
     The four files are TIME-RANGED (exact event-time quartiles) and
     written with both lexicographic names and strictly increasing
@@ -73,9 +71,7 @@ def _replay_input(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    d = _REPLAY_DIRS.get(sf_dir)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="streamq_")
+    def build(d: str) -> None:
         os.makedirs(f"{d}/in")
         ev = load_table(spark, sf_dir, "events")
         t = F.unix_micros(F.col("ts"))
@@ -97,8 +93,8 @@ def _replay_input(spark: SparkSession, sf_dir: str) -> str:
             shutil.rmtree(tmp)
             base = 1_600_000_000 + i  # strictly increasing mtimes
             os.utime(dst, (base, base))
-        _REPLAY_DIRS[sf_dir] = d
-    return d
+
+    return fixture_dir("replay", sf_dir, ["events"], build)
 
 
 def _replay(spark: SparkSession, sf_dir: str, agg_fn) -> DataFrame:
@@ -143,6 +139,7 @@ GROUP BY 1, 2
     "stream_windowed_counts",
     _STREAM_HOURLY_ORACLE,
     doc="Structured Streaming tumbling-window agg, oracle-checked vs batch SQL",
+    setup=_replay_input,
 )
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The S3 path realized end-to-end: file-source micro-batches →
@@ -177,6 +174,7 @@ GROUP BY user_id
     "stream_session_windows",
     _STREAM_SESSION_ORACLE,
     doc="Structured Streaming session windows, oracle-checked vs lag-gap SQL",
+    setup=_replay_input,
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``session_window`` (30-min gap) on the stream, rolled up to
@@ -205,6 +203,7 @@ GROUP BY event_type
     "stream_dedup_watermark",
     _STREAM_DEDUP_ORACLE,
     doc="dropDuplicatesWithinWatermark: exactly-once counts from duplicated input",
+    setup=_replay_input,
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every event is delivered TWICE into the stream; the
@@ -246,6 +245,7 @@ GROUP BY user_id
     "stream_join_left_outer",
     _STREAM_OUTER_JOIN_ORACLE,
     doc="watermarked stream-stream LEFT OUTER join, oracle-checked below the cutoff",
+    setup=_replay_input,
 )
 def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer attribution: every view row survives — matched views
@@ -316,6 +316,7 @@ GROUP BY user_id
     "stream_stateful_totals",
     _STREAM_STATEFUL_ORACLE,
     doc="applyInPandasWithState lifetime per-user totals, oracle-checked vs batch SQL",
+    setup=_replay_input,
 )
 def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom stateful operator (streaming/windows.running_user_totals:
@@ -369,6 +370,7 @@ try:  # pragma: no cover - protobuf absent in this image
         "stream_stateful_totals_tws",
         _STREAM_STATEFUL_ORACLE,
         doc="transformWithStateInPandas lifetime per-user totals, oracle-checked vs batch SQL",
+        setup=_replay_input,
     )
     def stream_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Spark 4 arbitrary-state API driven to completion; final
@@ -414,6 +416,7 @@ GROUP BY event_type
     "stream_available_now",
     _AVAILABLE_NOW_ORACLE,
     doc="Trigger.AvailableNow catch-up run == batch aggregate",
+    setup=_replay_input,
 )
 def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch-catchup streaming: ``trigger(availableNow=True)`` processes
@@ -474,6 +477,7 @@ GROUP BY 1, 2
     "stream_sliding_counts",
     _SLIDING_STREAM_ORACLE,
     doc="streaming sliding windows (2h window, 1h slide) == overlap-expanded batch SQL",
+    setup=_replay_input,
 )
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping windows on a real stream: ``window(ts, '2 hours',
@@ -520,40 +524,43 @@ FROM events
 GROUP BY 1, 2
 """
 
-_JSON_REPLAY_DIRS: dict[str, str] = {}
+
+def _json_replay_input(spark: SparkSession, sf_dir: str) -> str:
+    """The events fixture as JSON lines (one ``to_json(struct(*))``
+    value per event): a content-keyed directory fixture."""
+
+    def build(d: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        ev.select(F.to_json(F.struct(*ev.columns)).alias("value")).coalesce(
+            2
+        ).write.mode("overwrite").text(f"{d}/in")
+
+    return fixture_dir("json_replay", sf_dir, ["events"], build)
 
 
 @register(
     "stream_json_value_decode",
     _JSON_DECODE_ORACLE,
     doc="Kafka value-decode seam: JSON-lines stream -> from_json(EVENT_SCHEMA) -> watermarked windows == batch SQL",
+    setup=_json_replay_input,
 )
 def stream_json_value_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact transformation the Kafka source applies
     (streaming/windows.stream_events_from_kafka: value bytes →
     ``from_json(EVENT_SCHEMA)`` → typed columns), driven end to end
-    minus the broker: events serialize to JSON lines once per
-    (process, sf_dir), replay through a text file-source stream, decode
+    minus the broker: events serialize to JSON lines once per events
+    content (``_json_replay_input``), replay through a text file-source stream, decode
     with the SAME schema the Kafka path uses, and aggregate under a
     watermark. The result must equal batch SQL over the original table
     — proving the decode seam loses nothing (shortest-round-trip
     doubles, UTC timestamps). Swap the text source for the broker and
     nothing downstream changes."""
-    import os
-
     from web_attack_detection_spark.streaming.windows import (
         EVENT_SCHEMA,
         windowed_event_counts,
     )
 
-    d = _JSON_REPLAY_DIRS.get(sf_dir)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="streamq_json_")
-        ev = load_table(spark, sf_dir, "events")
-        ev.select(F.to_json(F.struct(*ev.columns)).alias("value")).coalesce(
-            2
-        ).write.mode("overwrite").text(f"{d}/in")
-        _JSON_REPLAY_DIRS[sf_dir] = d
+    d = _json_replay_input(spark, sf_dir)
     name = f"streamq_{uuid.uuid4().hex[:8]}"
     decoded = (
         spark.readStream.schema("value string")
@@ -595,6 +602,7 @@ GROUP BY 1
     "stream_static_enrichment",
     _STREAM_ENRICH_ORACLE,
     doc="stream-static broadcast enrichment join, aggregated per dimension value",
+    setup=_replay_input,
 )
 def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical production enrichment shape: a micro-batched event
@@ -660,6 +668,7 @@ GROUP BY 1, 2
     "stream_model_scoring",
     _STREAM_SCORE_ORACLE,
     doc="quantized linear scorer compiled into the streaming plan (zero Python)",
+    setup=_replay_input,
 )
 def stream_model_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-time model serving, the way it should ship at 100 TB/day:
@@ -745,6 +754,7 @@ GROUP BY c.w_cur, t.na, t.nb
     "stream_psi_windows",
     _STREAM_PSI_ORACLE,
     doc="streaming drift monitor: window-over-window PSI of the score distribution",
+    setup=_replay_input,
 )
 def stream_psi_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production drift alarm as a STREAM: the streaming side
@@ -857,6 +867,7 @@ FROM ranked WHERE rank <= 3
     "stream_topk_windows",
     _STREAM_TOPK_ORACLE,
     doc="top-3 event types per streaming hour window (stream agg + rank over the sink)",
+    setup=_replay_input,
 )
 def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live leaderboard: which event types dominate each hour of
@@ -913,6 +924,7 @@ FROM cum
     "stream_sprt_monitor",
     _STREAM_SPRT_ORACLE,
     doc="SPRT over streaming daily aggregates: state in-stream, sequential decision at read",
+    setup=_replay_input,
 )
 def stream_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ml_sprt_monitor fed by the STREAM: the watermarked 1-day
@@ -1066,6 +1078,7 @@ ORDER BY user_id, window_start"""
     _seqnet_stream_oracle(),
     doc="pinned integer RNN served IN-STREAM: watermarked per-(user, hour) "
     "sequence assembly + stateless codegen recurrence, oracle == batch SQL",
+    setup=_replay_input,
 )
 def stream_seqnet_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-model serving on a STREAM — the production shape for
@@ -1293,6 +1306,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     _stream_mlpx_oracle(),
     doc="exact-GD-TRAINED MLP served on the stream: train-in-engine then "
     "watermarked windowed scoring; oracle replays training AND scoring",
+    setup=_replay_input,
 )
 def stream_mlp_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closes the train->serve loop on the streaming surface with a
@@ -1372,6 +1386,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     doc="exact-GD-TRAINED recurrent net served on the stream: train "
     "in-engine then watermarked windowed scoring; oracle replays "
     "training AND scoring",
+    setup=_replay_input,
 )
 def stream_rnn_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recurrent twin of stream_mlp_trained_scoring: the exact-GD
@@ -1452,6 +1467,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     _stream_cnnx_oracle(),
     doc="exact-GD-TRAINED conv net served on the stream: train in-engine "
     "then watermarked windowed scoring; oracle replays training AND scoring",
+    setup=_replay_input,
 )
 def stream_cnn_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The convolutional leg of the train->serve program: the exact-GD
@@ -1513,6 +1529,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     _stream_lstmx_oracle(),
     doc="exact-GD-TRAINED LSTM served on the stream: train in-engine "
     "then watermarked windowed scoring; oracle replays training AND scoring",
+    setup=_replay_input,
 )
 def stream_lstm_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSTM leg closes the 4x4: ALL FOUR of the reference's model
@@ -1589,6 +1606,7 @@ GROUP BY 1 ORDER BY 1"""
     _stream_gbtx_oracle(),
     doc="exact boosted stumps trained on events in-engine, regression "
     "predictions served on the stream; oracle replays training AND scoring",
+    setup=_replay_input,
 )
 def stream_gbt_trained_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extends the train->serve program beyond the reference's four

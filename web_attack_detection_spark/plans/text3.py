@@ -344,8 +344,6 @@ def text_bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engine aggregation, oracle-checked against the original table.
 # ---------------------------------------------------------------------------
 
-_WARC_DIRS: dict[str, str] = {}
-
 _WARC_ORACLE = """
 SELECT 'text/plain' AS content_type,
        CAST(COUNT(*) AS BIGINT) AS n_records,
@@ -355,31 +353,15 @@ FROM documents WHERE doc_id <= 200
 """
 
 
-@register(
-    "warc_ingest_stats",
-    _WARC_ORACLE,
-    doc="WARC crawl-archive ingestion (Python data source) == source-table truth",
-)
-def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end crawl-archive ingestion check: the documents table is
-    archived into 4 plain WARC files once per (process, sf_dir), read
-    back through the ``warc`` Python data source (io/warc.py — one
-    input partition per archive), and reduced to byte-level totals that
-    must equal what DuckDB computes from the ORIGINAL table — proving
-    the writer, the parser, and the Arrow hop lose nothing.
+def _warc_input(spark: SparkSession, sf_dir: str) -> str:
+    """Documents with doc_id <= 200 archived into 4 plain WARC files
+    (doc_id % 4 picks the shard): a content-keyed directory fixture.
+    The one collect() here MANUFACTURES the archive — the measured
+    path is the read-back."""
+    from web_attack_detection_spark.io.fixtures import fixture_dir
+    from web_attack_detection_spark.io.warc import write_warc
 
-    The doc_id round-trips through the WARC-Target-URI, which is how
-    real crawl pipelines key provenance. (The one-time collect() here
-    MANUFACTURES the archive fixture — the measured path is the
-    read-back: file-parallel Python source -> Arrow -> JVM aggregate,
-    no driver data.)"""
-    import tempfile
-
-    from web_attack_detection_spark.io.warc import WarcDataSource, write_warc
-
-    d = _WARC_DIRS.get(sf_dir)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="warc_fix_")
+    def build(d: str) -> None:
         docs = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") <= 200)
@@ -398,7 +380,32 @@ def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if r["doc_id"] % 4 == shard
                 ],
             )
-        _WARC_DIRS[sf_dir] = d
+
+    return fixture_dir("warc", sf_dir, ["documents"], build)
+
+
+@register(
+    "warc_ingest_stats",
+    _WARC_ORACLE,
+    doc="WARC crawl-archive ingestion (Python data source) == source-table truth",
+    setup=_warc_input,
+)
+def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end crawl-archive ingestion check: the documents table is
+    archived into 4 plain WARC files (``_warc_input``, the declared
+    setup), read back through the ``warc`` Python data source
+    (io/warc.py — one input partition per archive), and reduced to
+    byte-level totals that must equal what DuckDB computes from the
+    ORIGINAL table — proving the writer, the parser, and the Arrow hop
+    lose nothing.
+
+    The doc_id round-trips through the WARC-Target-URI, which is how
+    real crawl pipelines key provenance. The measured path is the
+    read-back: file-parallel Python source -> Arrow -> JVM aggregate,
+    no driver data."""
+    from web_attack_detection_spark.io.warc import WarcDataSource
+
+    d = _warc_input(spark, sf_dir)
     spark.dataSource.register(WarcDataSource)
     warc = spark.read.format("warc").load(d)
     doc_id = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long")

@@ -35,19 +35,12 @@ from web_attack_detection_spark.plans.registry import register
 _US = bpe.US
 _US2 = _US + _US
 
-# one training run per (session, sf_dir): text_bpe_train and
-# text_bpe_encode share it within a process; a fresh driver session
-# recomputes (the _IVF_STORE pattern)
-_BPE_STORE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
 
-
-def _trained(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_STORE:
-        docs = load_table(spark, sf_dir, "documents")
-        words = docs.select(F.explode(F.split("text", r"\s+")).alias("w"))
-        _BPE_STORE[key] = bpe.bpe_train(words)
-    return _BPE_STORE[key]
+def _corpus_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every whitespace-split word occurrence: the tokenizer trainers'
+    input. Each train/encode query trains its own tokenizer on it."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select(F.explode(F.split("text", r"\s+")).alias("w"))
 
 
 def _oracle_rounds(n_rounds: int) -> str:
@@ -123,7 +116,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     round so lineage never grows (functions/bpe.py).  Oracle: the same
     rounds replayed as generated materialized CTEs — merges match
     string-for-string, frequency-for-frequency."""
-    merges, _ = _trained(spark, sf_dir)
+    merges, _ = bpe.bpe_train(_corpus_words(spark, sf_dir))
     return spark.createDataFrame(
         merges,
         "merge_rank long, left_sym string, right_sym string,"
@@ -173,7 +166,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces as ONE chained codegen projection, no join, no shuffle
     (twin-tested on unseen words in tests/test_bpe.py); here every
     word is in-vocab by construction."""
-    merges, state = _trained(spark, sf_dir)
+    merges, state = bpe.bpe_train(_corpus_words(spark, sf_dir))
     docs = load_table(spark, sf_dir, "documents")
     docw = docs.select(
         "doc_id", F.explode(F.split("text", r"\s+")).alias("w")
@@ -200,17 +193,6 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # WordPiece trainer (likelihood-scored merges) — full oracle
 # ---------------------------------------------------------------------------
-
-_WP_STORE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
-def _wp_trained(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WP_STORE:
-        docs = load_table(spark, sf_dir, "documents")
-        words = docs.select(F.explode(F.split("text", r"\s+")).alias("w"))
-        _WP_STORE[key] = bpe.wordpiece_train(words)
-    return _WP_STORE[key]
 
 
 def _wp_oracle_rounds(n_rounds: int) -> str:
@@ -312,7 +294,7 @@ def text_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges table hash-matches string-for-string, score-for-score.
     Spark == pure-Python twin (bpe.wordpiece_train_py) is pytested
     including the '##' merge-concatenation rule."""
-    merges, _ = _wp_trained(spark, sf_dir)
+    merges, _ = bpe.wordpiece_train(_corpus_words(spark, sf_dir))
     return spark.createDataFrame(
         merges,
         "merge_rank long, left_sym string, right_sym string,"
@@ -358,7 +340,7 @@ def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented representation constraint), so the join keys align.
     Full oracle: the DuckDB twin retrains the same 15 rounds and
     replays the reconstruction check."""
-    merges, state = _wp_trained(spark, sf_dir)
+    merges, state = bpe.wordpiece_train(_corpus_words(spark, sf_dir))
     docs = load_table(spark, sf_dir, "documents")
     docw = docs.select(
         "doc_id", F.explode(F.split("text", r"\s+")).alias("w")
@@ -548,19 +530,12 @@ _UT_K = 120  # seed vocabulary size (top grams by corpus frequency)
 _UT_PRUNE = 20  # pieces pruned per EM round
 _UT_ROUNDS = 3  # EM rounds (final vocab: _UT_K - _UT_ROUNDS*_UT_PRUNE)
 
-_UT_STORE: dict[tuple[str, str], tuple[dict, list]] = {}
-
-
 def _ut_trained(spark: SparkSession, sf_dir: str) -> tuple[dict, list]:
     """(final piece->cost dict, final [(piece, uses, cost)] rows) — one
-    training run per (session, sf_dir), the _BPE_STORE pattern."""
+    training run per call."""
     from web_attack_detection_spark.functions import unigram
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _UT_STORE:
-        return _UT_STORE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    allw = docs.select(F.explode(F.split("text", r"\s+")).alias("w")).filter(
+    allw = _corpus_words(spark, sf_dir).filter(
         (F.length("w") >= 1) & (F.length("w") <= _UNI_MAXW)
     )
     # the word vocabulary: every round re-reads it — pin it once
@@ -628,8 +603,7 @@ def _ut_trained(spark: SparkSession, sf_dir: str) -> tuple[dict, list]:
         rows = vdf.collect()
         costs = {x["gram"]: int(x["cost"]) for x in rows}
         table = rows
-    _UT_STORE[key] = (costs, table)
-    return _UT_STORE[key]
+    return costs, table
 
 
 def _ut_chain() -> str:
@@ -855,9 +829,8 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Full oracle: the DuckDB twin re-trains the same 3 EM rounds
     (shared ``_ut_chain``) and replays the final Viterbi + backtrace
     as one more recursive-CTE pair, then the same per-doc
-    aggregation.  Training is shared with text_unigram_train through
-    ``_ut_trained`` (one fit per session/sf_dir — the _BPE_STORE
-    pattern), so in a bench run the corpus trains once.  Scale: the
+    aggregation.  Training is the same ``_ut_trained`` fit
+    text_unigram_train runs.  Scale: the
     DP/backtrace run per DISTINCT word (map-side codegen folds); docs
     join the |word-vocab|-sized encoded relation by broadcast."""
     from web_attack_detection_spark.functions import unigram
