@@ -197,7 +197,6 @@ def test_protocol_history_flows_through_v1_plot(spark, tmp_path):
     _, hist = train.fit_sequence_net(
         df, "mlp", L, C, epochs=4, lr=1e-3, clip_norm=0.0, seed=3,
         optimizer="adam", batch_size=32, val_df=df, patience=None,
-        exec_mode="fused",
     )
     out = plot_history(
         {"loss": hist["loss"], "val_loss": hist["val_loss"]},

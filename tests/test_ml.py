@@ -204,9 +204,9 @@ def test_fused_fit_matches_standalone_primitives(spark):
 
 
 def test_fused_fit_empty_train_split(spark):
-    """ADVICE r3: an EMPTY train split produces no 'row' group in the
-    analytic fused-fit melt; the fit must degrade to None stats (like
-    the old train.agg().first() path) instead of raising TypeError."""
+    """ADVICE r3: an EMPTY train split never fires the fit scan's
+    observed metrics; the fit must degrade to None stats (like the old
+    train.agg().first() path) instead of raising TypeError."""
     from web_attack_detection_spark.functions.feature import fit_feature_pipeline
     from web_attack_detection_spark.io.sources import load_table
     from .conftest import SF_SMOKE
@@ -215,24 +215,21 @@ def test_fused_fit_empty_train_split(spark):
         "event_id", "value", "event_type"
     )
     empty = ev.filter(F.lit(False))
-    for method in ("analytic", "gramian"):
-        fp = fit_feature_pipeline(
-            empty, label_col="event_type", pca_k=3, pca_method=method
-        )
-        assert fp.means["value"] is None
-        assert fp.scaler_stats["value"][1] is None
-        assert fp.label_model == {}
-        # transform of the full frame stays runnable (lookups drop all
-        # rows — the label has no fitted vocabulary)
-        assert fp.transform(ev).count() == 0
+    fp = fit_feature_pipeline(empty, label_col="event_type", pca_k=3)
+    assert fp.means["value"] is None
+    assert fp.scaler_stats["value"][1] is None
+    assert fp.label_model == {}
+    # transform of the full frame stays runnable (lookups drop all
+    # rows — the label has no fitted vocabulary)
+    assert fp.transform(ev).count() == 0
 
 
-def test_analytic_pca_matches_gramian(spark):
-    """The single-scan analytic PCA (one-hot algebra + NULL
-    decomposition over the fused fit stats) must agree with the
-    explicit Arrow-Gramian pass to float tolerance — including planted
-    numeric nulls (imputer path) and null categoricals/labels (the
-    full-row gating that mirrors the transform's lookup filters)."""
+def test_pipeline_pca_matches_mllib_pca(spark):
+    """The pipeline's PCA stage must agree with MLlib's RowMatrix PCA
+    (the reference's ``PCA(k=20)``) fitted over the same pre-PCA
+    assembled features, up to per-axis sign — including planted
+    numeric nulls (imputer path) and null categoricals/labels (rows
+    the transform's lookups drop before the PCA fit)."""
     import numpy as np
 
     from web_attack_detection_spark.functions.feature import fit_feature_pipeline
@@ -255,16 +252,16 @@ def test_analytic_pca_matches_gramian(spark):
         )
     )
     for df in (train, hostile):
-        ma = fit_feature_pipeline(df, label_col="event_type", pca_k=10,
-                                  pca_method="analytic")
-        mg = fit_feature_pipeline(df, label_col="event_type", pca_k=10,
-                                  pca_method="gramian")
-        ca = np.array(ma.pca_model.components)
-        cg = np.array(mg.pca_model.components)
-        assert np.abs(ca - cg).max() < 1e-9
-        ea = np.array(ma.pca_model.explainedVariance)
-        eg = np.array(mg.pca_model.explainedVariance)
-        assert np.abs(ea - eg).max() < 1e-12
+        model = fit_feature_pipeline(df, label_col="event_type", pca_k=10)
+        pre = fit_feature_pipeline(df, label_col="event_type")
+        ml = fit_pca(pre.transform(df).select("features"), "features", model.pca_k)
+        cn = np.array(model.pca_model.components)
+        cm = ml.pc.toArray().T
+        sign = np.sign(np.sum(cn * cm, axis=1))[:, None]
+        assert np.abs(cn - sign * cm).max() < 1e-9
+        en = np.array(model.pca_model.explainedVariance)
+        em = ml.explainedVariance.toArray()
+        assert np.abs(en - em).max() < 1e-12
 
 
 def test_mlp_weights_roundtrip_parity(spark):

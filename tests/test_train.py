@@ -5,14 +5,14 @@ The claims under test, strongest first:
    (the gold-standard backprop check);
 2. the backward pass's embedded forward agrees exactly with the
    inference forward in ml/nets.py (no train/score drift);
-3. the DISTRIBUTED gradient (mapInPandas partials + chunked reduce)
-   equals the single-process gradient;
+3. the DISTRIBUTED full-batch gradient (mapInPandas partials +
+   chunked reduce) equals the single-process gradient;
 4. training actually learns: loss falls and held-out accuracy beats
    the majority class on separable synthetic data;
 5. the REFERENCE PROTOCOL (round 6): the Adam step matches the
    textbook bias-corrected update exactly; minibatch hash shards
-   match their numpy twin; EarlyStopping restores bit-identical
-   best-epoch weights; fused and allreduce exec modes agree;
+   reshuffle every epoch; EarlyStopping restores bit-identical
+   best-epoch weights; the single-task fit equals its local twin;
 6. weight-file save -> load -> distributed serve loses nothing;
 7. the registered queries run end-to-end, early-stop inside the
    50-epoch cap, and report learning.
@@ -356,27 +356,6 @@ def _protocol_df(spark, n=96, L=16, C=3, seed=8):
     return df, X, y
 
 
-def test_minibatch_shard_gradient_equals_local(spark):
-    """One reference-protocol minibatch step: the distributed gradient
-    over an epoch-salted hash shard equals the local gradient over the
-    same rows (shard formula replicated in numpy — BIGINT-exact)."""
-    df, X, y = _protocol_df(spark)
-    n_shards = 3
-    epoch = 2
-    params = train.init_params("rnn", 16, 3, seed=5)
-    ids = np.arange(len(y), dtype=np.int64)
-    shard = train._shard_ids(ids, epoch, n_shards)
-    for s in range(n_shards):
-        batch = df.filter(train._shard_expr("vec_id", epoch, n_shards) == s)
-        loss_d, grad_d, n_d = train.distributed_loss_grad(batch, "rnn", params)
-        mask = shard == s
-        ls, g = train.GRAD_FNS["rnn"](X[mask], y[mask], params)
-        assert n_d == mask.sum(), s
-        assert abs(loss_d - ls / mask.sum()) < 1e-9
-        assert np.allclose(grad_d, train.flatten_params(g) / mask.sum(), atol=1e-9)
-    df.unpersist()
-
-
 def test_reference_protocol_early_stops_and_restores_best(spark):
     """EarlyStopping(patience, restore_best): an early-stopped fit must
     return BIT-IDENTICAL weights to a fresh fit truncated at the best
@@ -407,7 +386,7 @@ def test_reference_protocol_early_stops_and_restores_best(spark):
 
 
 def test_reference_protocol_matches_local_numpy_twin(spark):
-    """Full-protocol parity: the distributed minibatch Adam fit tracks
+    """Full-protocol parity: the in-task minibatch Adam fit tracks
     a single-process numpy twin of the identical trajectory (same
     shards, same updates) to fp-accumulation tolerance."""
     df, X, y = _protocol_df(spark)
@@ -521,22 +500,20 @@ def test_weight_file_serving_bit_identical(spark, tmp_path, arch):
     df.unpersist()
 
 
-def test_fused_equals_local_twin_bit_exact_and_allreduce_close(spark):
-    """exec_mode='fused' runs protocol_fit_arrays inside a worker task
-    — same code, same rows, same order as calling it locally, so the
+def test_fused_equals_local_twin_bit_exact(spark):
+    """A protocol fit runs protocol_fit_arrays inside a worker task —
+    same code, same rows, same order as calling it locally, so the
     trajectories must agree to the cross-process BLAS one-ULP class
     (openblas picks alignment-dependent kernels, so driver and worker
     processes can differ in the last bit per gemm — the same effect
-    test_weight_file_serving_bit_identical documents), and
-    trajectory-equal to the per-step allreduce mode."""
+    test_weight_file_serving_bit_identical documents)."""
     df, X, y = _protocol_df(spark)
     ids = np.arange(len(y), dtype=np.int64)
     kw = dict(
         epochs=6, lr=0.02, clip_norm=0.0, seed=9, optimizer="adam",
         batch_size=32, patience=None,
     )
-    p_f, h_f = train.fit_sequence_net(df, "rnn", 16, 3, val_df=df,
-                                      exec_mode="fused", **kw)
+    p_f, h_f = train.fit_sequence_net(df, "rnn", 16, 3, val_df=df, **kw)
     # local twin on identical rows
     template = train.init_params("rnn", 16, 3, seed=9)
     flat0 = train.flatten_params(template)
@@ -550,13 +527,6 @@ def test_fused_equals_local_twin_bit_exact_and_allreduce_close(spark):
     )
     assert np.allclose(h_f["loss"], h_l["loss"], atol=1e-7)
     assert np.allclose(h_f["val_loss"], h_l["val_loss"], atol=1e-7)
-    # allreduce trajectory agrees to fp tolerance
-    p_a, h_a = train.fit_sequence_net(df, "rnn", 16, 3, val_df=df,
-                                      exec_mode="allreduce", **kw)
-    assert np.allclose(
-        train.flatten_params(p_f), train.flatten_params(p_a), atol=1e-7
-    )
-    assert np.allclose(h_f["loss"], h_a["loss"], atol=1e-9)
     df.unpersist()
 
 
@@ -577,32 +547,15 @@ def test_mlp_protocol_query_early_stops(spark):
     assert row["test_accuracy"] >= row["majority_share"] - 0.05, row
 
 
-def test_shard_hash_spark_numpy_exact_and_epoch_reshuffles(spark):
-    """The epoch-salted shard mixer: (a) the Spark ANSI-safe hi/lo
-    split expression is BIGINT-exact vs the numpy uint64 twin up to
-    id 2**62, and (b) minibatch COMPOSITION actually changes across
-    epochs at the independent-random rate 2*(1/n)*(1-1/n) — the r6
-    advice found the old additive salt only rotated shard labels."""
-    import pandas as pd
-
-    ids = np.array(
-        list(range(2000)) + [2**40 + 7, 2**52 + 123, 2**62], dtype=np.int64
-    )
-    df = spark.createDataFrame(pd.DataFrame({"vec_id": ids}))
-    for epoch, n in [(1, 7), (17, 3), (50, 64)]:
-        got = {
-            r["vec_id"]: r["s"]
-            for r in df.select(
-                "vec_id", train._shard_expr("vec_id", epoch, n).alias("s")
-            ).collect()
-        }
-        want = train._shard_ids(ids, epoch, n)
-        assert np.array_equal(
-            np.array([got[int(i)] for i in ids]), want
-        ), (epoch, n)
+def test_shard_hash_epoch_reshuffles():
+    """The epoch-salted shard mixer: minibatch COMPOSITION actually
+    changes across epochs at the independent-random rate
+    2*(1/n)*(1-1/n) — the r6 advice found the old additive salt only
+    rotated shard labels."""
+    ids = np.arange(2000, dtype=np.int64)
     n = 7
-    s1 = train._shard_ids(ids[:2000], 1, n)
-    s2 = train._shard_ids(ids[:2000], 2, n)
+    s1 = train._shard_ids(ids, 1, n)
+    s2 = train._shard_ids(ids, 2, n)
     co1 = s1[:, None] == s1[None, :]
     co2 = s2[:, None] == s2[None, :]
     frac = float((co1 != co2).mean())
@@ -610,8 +563,7 @@ def test_shard_hash_spark_numpy_exact_and_epoch_reshuffles(spark):
     assert abs(frac - ideal) < 0.03, frac  # sequential ids, full avalanche
 
 
-@pytest.mark.parametrize("mode", ["allreduce", "fused"])
-def test_empty_validation_set_fails_loudly(spark, mode):
+def test_empty_validation_set_fails_loudly(spark):
     """An accidentally-empty val_df must raise, not freeze best
     weights at epoch 1 via a spurious 0.0 val loss (r6 advice)."""
     df, X, y = _protocol_df(spark)
@@ -620,7 +572,6 @@ def test_empty_validation_set_fails_loudly(spark, mode):
         train.fit_sequence_net(
             df, "rnn", 16, 3, epochs=3, lr=0.02, clip_norm=0.0, seed=6,
             optimizer="adam", batch_size=32, val_df=empty_val, patience=2,
-            exec_mode=mode,
         )
     df.unpersist()
 
@@ -683,8 +634,7 @@ def test_dropout_protocol_reproducible_and_restores_best(spark):
     df, X, y = _protocol_df(spark)
     kw = dict(
         epochs=30, lr=0.02, clip_norm=0.0, seed=6, optimizer="adam",
-        batch_size=32, val_df=df, patience=3, exec_mode="fused",
-        dropout=0.3,
+        batch_size=32, val_df=df, patience=3, dropout=0.3,
     )
     p1, h1 = train.fit_sequence_net(df, "rnn", 16, 3, **kw)
     p2, h2 = train.fit_sequence_net(df, "rnn", 16, 3, **kw)
@@ -705,12 +655,15 @@ def test_dropout_protocol_reproducible_and_restores_best(spark):
 
 
 def test_dropout_requires_fused_minibatch(spark):
+    """Dropout masks are seeded per minibatch step inside the protocol
+    kernel, so a full-batch fit (legacy SGD or full-batch Adam) with
+    dropout must raise rather than silently train without it."""
     df, X, y = _protocol_df(spark)
-    with pytest.raises(ValueError, match="fused"):
-        train.fit_sequence_net(
-            df, "rnn", 16, 3, epochs=2, lr=0.02, seed=1, optimizer="adam",
-            batch_size=32, exec_mode="allreduce", dropout=0.3,
-        )
+    for kw in ({}, {"optimizer": "adam", "val_df": df}):
+        with pytest.raises(ValueError, match="minibatch"):
+            train.fit_sequence_net(
+                df, "rnn", 16, 3, epochs=2, lr=0.02, seed=1, dropout=0.3, **kw
+            )
     df.unpersist()
 
 

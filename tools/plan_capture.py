@@ -2,6 +2,9 @@
 
 Usage: python tools/plan_capture.py --out DIR [--suffix _after] [--sf DIR] name...
 
+``name`` is a registered query, or ``flagship_pipeline`` (the
+``__spark_entry__.entry`` query, which is not in the registry).
+
 Multi-job queries (the exact trainers, kmeans, streaming replays)
 return a driver-local tidy relation whose own explain is a trivial
 LocalTableScan; the plans that matter are the per-round jobs.  This
@@ -42,6 +45,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from web_attack_detection_spark.plans import all_plans  # noqa: F401
+    from web_attack_detection_spark.plans.flagship import flagship_pipeline
     from web_attack_detection_spark.plans.registry import QUERIES
     from web_attack_detection_spark.session import build_session
 
@@ -97,7 +101,12 @@ def main() -> int:
         for m in orig:
             setattr(CDF, m, _wrap(m))
         try:
-            df = QUERIES[name].fn(spark, args.sf)
+            fn = (
+                flagship_pipeline
+                if name == "flagship_pipeline"
+                else QUERIES[name].fn
+            )
+            df = fn(spark, args.sf)
         finally:
             for m, f in orig.items():
                 setattr(CDF, m, f)

@@ -397,7 +397,6 @@ def fit_feature_pipeline(
     label_col: str | None = None,
     reference_compat: bool = False,
     pca_k: int | None = None,
-    pca_method: str = "auto",
 ) -> FeaturePipelineModel:
     """Fit the reference's 9-stage feature pipeline, fit-on-train-only
     (the *correct* scoping at ``data_preprocessing.py:54-58``; the raw
@@ -406,243 +405,91 @@ def fit_feature_pipeline(
     Job layout — the part that matters at 100 TB, where every fit job
     is a full scan of the train split:
 
-    ONE fused melt scan computes EVERY fit statistic: imputer means,
-    post-impute scaler stddevs, all string-indexer counts (categoricals
-    and the label) AND — with ``pca_k`` set and ``pca_method=
-    "analytic"`` (default) — the full PCA covariance, via the one-hot /
-    NULL-decomposition algebra documented at the melt below. The WHOLE
-    9-stage fit is therefore a single input pass ending in an O(d³)
-    driver eigensolve. Imputing a column with its own mean leaves the
-    mean unchanged and contributes zero squared deviation, so the
-    imputed sample variance is exactly
+    ONE scan computes every pre-PCA fit statistic: all string-indexer
+    counts (categoricals and the label) from a (col, value) melt, with
+    the imputer means and post-impute scaler stddevs riding the same
+    scan as observed metrics. Imputing a column with its own mean
+    leaves the mean unchanged and contributes zero squared deviation,
+    so the imputed sample variance is exactly
     ``var_nonnull · (n_nonnull − 1) / (n_total − 1)`` — no second pass
     over imputed data needed. The per-column frequencyDesc/value-asc
     rank is applied driver-side over the collected (tiny,
     Σ cardinalities) count set.
 
-    ``pca_method="gramian"`` keeps the explicit two-pass form (fused
-    stats, then the Arrow Gramian over the assembled projection —
-    ml/pipeline.fit_pca_native); the two agree to float tolerance
-    (≤1e-11 on components, tests/test_ml.py) and gramian is also the
-    fallback when the filtered train is degenerate (≤1 surviving row).
-    The analytic melt carries O(m²) aggregate columns, so it wins only
-    for moderate numeric width; the per-batch Arrow gemm scales in d
-    where expression count cannot. ``"auto"`` (default) picks analytic
-    for m ≤ 24 numerics (the flagship's regime: one pass total) and
-    gramian beyond (e.g. the 42-numeric UNSW shape, where m² would be
-    thousands of janino-compiled aggregates).
+    With ``pca_k`` set, a second pass fits the PCA over the pipeline's
+    own assembled output (``model.transform(train)``): the Arrow
+    Gramian of ml/pipeline.fit_pca_native — one partial ``AᵀA`` gemm
+    per Arrow batch, constant-size output, then an O(d³) driver
+    eigensolve.
 
-    The standalone F1/F3/F5 operators (fit_string_indexer,
-    fit_imputer_mean, fit_scaler) keep their one-job-per-stage form —
-    they are the oracle-checked primitives; this fit composes their
-    math, not their jobs.
+    This fit composes the math of the standalone F1/F3/F5 operators
+    (fit_string_indexer, fit_imputer_mean, fit_scaler), not their
+    one-job-per-stage form; tests/test_ml.py pins its statistics to
+    theirs.
     """
+    from pyspark.sql import Observation
+
     categorical, numeric = classify_columns(train, label_col, reference_compat)
     m = len(numeric)
-    if pca_method == "auto":
-        pca_method = "analytic" if m <= 24 else "gramian"
-    analytic = pca_k is not None and pca_method == "analytic"
 
-    # --- ONE fused fit scan ----------------------------------------------
-    # Melt each row into structs and aggregate by (kind, col, sval,
-    # sval2):
-    #   - ONE 'row' struct per input row carries every numeric value:
-    #     its single group yields per-column count/avg/var_samp
-    #     (bit-identical to the per-column agg) — and, under analytic
-    #     PCA, the raw second moments (pair products with the NULL
-    #     decomposition below);
-    #   - one 'cat' struct per categorical/label column: per-value
-    #     counts for the indexers, plus (analytic PCA) per-value
-    #     numeric sums for the one-hot × numeric covariance block;
-    #   - (analytic PCA) one 'cp' struct per categorical PAIR: joint
-    #     value counts for the one-hot × one-hot cross-column block.
-    # One scan, one partially-aggregated shuffle whose keys are
-    # Σ cardinalities + pairwise joints — tiny at any data scale. The
-    # melt multiplies rows ×(1+|cats|+|cat pairs|) BEFORE the map-side
-    # combine collapses them — the right trade when the input is a scan
-    # (IO-bound). The standalone F1/F3/F5 operators keep their
-    # one-job-per-stage form.
-    #
-    # ANALYTIC PCA (single-scan fit, VERDICT r3): the transform's PCA
-    # input is the imputed+scaled assembly over rows that SURVIVE the
-    # categorical/label lookups (non-null), so every PCA moment is
-    # gated on `full` (all categoricals + label non-null) and the
-    # imputed products are recovered exactly from raw ones:
-    #   Σ x'ᵢx'ⱼ = Σ_{both} xᵢxⱼ + μᵢ·Σ_{i null} xⱼ + μⱼ·Σ_{j null} xᵢ
-    #             + n_{both null}·μᵢμⱼ
-    # (x' = coalesce(x, μ)); scaling is diagonal, applied driver-side.
-    # The covariance then eigensolves on the driver (ml/pipeline.
-    # pca_from_moments) — the WHOLE 9-stage fit is one input pass.
+    # --- ONE fit scan -----------------------------------------------------
+    # The numeric moments ride the categorical-count scan as OBSERVED
+    # metrics (CollectMetrics — evaluated once per input row, below the
+    # melt), so the fit is one scan with no row-struct explosion.
+    # Measured at m=42 (the UNSW shape): 1.7× faster than a struct-melt
+    # form carrying the numerics; parity at m=6.
     fit_cols = list(categorical) + ([label_col] if label_col is not None else [])
-    xf = [F.col(c).cast("double").alias(f"x{j}") for j, c in enumerate(numeric)]
-    xnull = [F.lit(None).cast("double").alias(f"x{j}") for j in range(m)]
-    if analytic and (categorical or label_col is not None):
-        full = F.lit(True)
-        for c in fit_cols:
-            full = full & F.col(c).isNotNull()
-    else:
-        full = F.lit(True)
-
-    def mk(kind, col, sval, sval2, xs):
-        return F.struct(
-            F.lit(kind).alias("kind"),
-            (F.lit(col) if col is not None else F.lit(None).cast("string")).alias("col"),
-            sval.alias("sval"),
-            sval2.alias("sval2"),
-            full.alias("full"),
-            *xs,
-        )
-
-    nulls = F.lit(None).cast("string")
-    structs = [mk("row", None, nulls, nulls, xf)]
-    for c in fit_cols:
+    cat_counts: dict[str, list] = {c: [] for c in fit_cols}
+    metrics = [F.count(F.lit(1)).alias("cnt")]
+    for j, c in enumerate(numeric):
+        x = F.col(c).cast("double")
+        metrics += [
+            F.count(x).alias(f"nn{j}"),
+            F.avg(x).alias(f"avg{j}"),
+            F.var_samp(x).alias(f"var{j}"),
+        ]
+    obs = Observation()
+    observed = train.observe(obs, *metrics)
+    if fit_cols:
         # cast keeps the melt array homogeneous; the pipeline's
         # categoricals/labels are strings by classification, so the
-        # cast is a no-op for them. x values ride along only where the
-        # analytic PCA needs per-value numeric sums (feature cats).
-        want_x = analytic and c != label_col
-        structs.append(
-            mk("cat", c, F.col(c).cast("string"), nulls, xf if want_x else xnull)
-        )
-    if analytic:
-        for i in range(len(categorical)):
-            for j in range(i + 1, len(categorical)):
-                ci, cj = categorical[i], categorical[j]
-                structs.append(
-                    mk(
-                        "cp",
-                        f"{ci}\x1f{cj}",
-                        F.col(ci).cast("string"),
-                        F.col(cj).cast("string"),
-                        xnull,
-                    )
+        # cast is a no-op for them
+        pairs = observed.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(c).alias("col"),
+                            F.col(c).cast("string").alias("sval"),
+                        )
+                        for c in fit_cols
+                    ]
                 )
-
-    row_grp = None
-    cat_grps: dict[str, list] = {c: [] for c in fit_cols}
-    cp_grps: list = []
-    cat_counts: dict[str, list] = {c: [] for c in fit_cols}
-
-    if analytic:
-        aggs = [F.count(F.lit(1)).alias("cnt")]
-        for j in range(m):
-            x = F.col(f"x{j}")
-            aggs += [
-                F.count(x).alias(f"nn{j}"),
-                F.avg(x).alias(f"avg{j}"),
-                F.var_samp(x).alias(f"var{j}"),
-            ]
-        fl = F.col("full")
-        aggs.append(F.count(F.when(fl, 1)).alias("nfull"))
-        for j in range(m):
-            x = F.col(f"x{j}")
-            aggs += [
-                F.sum(F.when(fl, x)).alias(f"sf{j}"),
-                F.count(F.when(fl, x)).alias(f"nnf{j}"),
-            ]
-        for i in range(m):
-            xi = F.col(f"x{i}")
-            for j in range(i, m):
-                xj = F.col(f"x{j}")
-                aggs.append(F.sum(F.when(fl, xi * xj)).alias(f"p{i}_{j}"))
-                if j > i:
-                    aggs.append(
-                        F.sum(F.when(fl & xi.isNull(), xj)).alias(f"a{i}_{j}")
-                    )
-                    aggs.append(
-                        F.sum(F.when(fl & xj.isNull(), xi)).alias(f"a{j}_{i}")
-                    )
-                    aggs.append(
-                        F.count(
-                            F.when(fl & xi.isNull() & xj.isNull(), 1)
-                        ).alias(f"c{i}_{j}")
-                    )
-        stats_rows = (
-            train.select(F.explode(F.array(*structs)).alias("p"))
-            .select("p.*")
-            .groupBy("kind", "col", "sval", "sval2")
-            .agg(*aggs)
+            ).alias("p")
+        ).select("p.*")
+        for r in (
+            pairs.filter(F.col("sval").isNotNull())
+            .groupBy("col", "sval")
+            .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
-        )
-        for r in stats_rows:
-            if r["kind"] == "row":
-                row_grp = r
-            elif r["kind"] == "cat" and r["sval"] is not None:
-                cat_grps[r["col"]].append(r)  # NULL cat values unindexed
-            elif r["kind"] == "cp":
-                cp_grps.append(r)
-        for c in fit_cols:
-            cat_counts[c] = [(r["sval"], r["cnt"]) for r in cat_grps[c]]
-        # An empty train split yields NO "row" group (groupBy over zero
-        # rows): degrade to None stats like the old train.agg().first()
-        # path did, instead of subscripting None (ADVICE r3).
-        n_total = row_grp["cnt"] if row_grp is not None else 0
-        if row_grp is not None:
-            means = {c: row_grp[f"avg{j}"] for j, c in enumerate(numeric)}
-            var_rows = {
-                c: (row_grp[f"var{j}"], row_grp[f"nn{j}"])
-                for j, c in enumerate(numeric)
-            }
-        else:
-            means = {c: None for c in numeric}
-            var_rows = {c: (None, 0) for c in numeric}
+        ):
+            cat_counts[r["col"]].append((r["sval"], r["cnt"]))
     else:
-        # gramian / no-PCA layout: the numeric moments ride the
-        # categorical-count scan as OBSERVED metrics (CollectMetrics —
-        # evaluated once per input row, below the melt), so the fit is
-        # still ONE scan but without the row-struct explosion or the
-        # O(m²) pair aggregates. Measured at m=42 (the UNSW shape):
-        # 1.7× faster than the struct-melt form; parity at m=6.
-        from pyspark.sql import Observation
-
-        metrics = [F.count(F.lit(1)).alias("cnt")]
-        for j, c in enumerate(numeric):
-            x = F.col(c).cast("double")
-            metrics += [
-                F.count(x).alias(f"nn{j}"),
-                F.avg(x).alias(f"avg{j}"),
-                F.var_samp(x).alias(f"var{j}"),
-            ]
-        obs = Observation()
-        observed = train.observe(obs, *metrics)
-        if fit_cols:
-            pairs = observed.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(c).alias("col"),
-                                F.col(c).cast("string").alias("sval"),
-                            )
-                            for c in fit_cols
-                        ]
-                    )
-                ).alias("p")
-            ).select("p.*")
-            for r in (
-                pairs.filter(F.col("sval").isNotNull())
-                .groupBy("col", "sval")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            ):
-                cat_counts[r["col"]].append((r["sval"], r["cnt"]))
-        else:
-            observed.select(F.lit(1)).count()  # drive the metrics
-        try:
-            g = obs.get
-        except Exception:
-            # an empty train (e.g. filter(lit(False))) optimizes to an
-            # empty LocalRelation and the CollectMetrics node never
-            # fires — degrade to None stats (ADVICE r3 empty-train
-            # guard, same contract as the analytic branch)
-            g = None
-        n_total = g["cnt"] if g is not None else 0
-        if g is not None:
-            means = {c: g[f"avg{j}"] for j, c in enumerate(numeric)}
-            var_rows = {c: (g[f"var{j}"], g[f"nn{j}"]) for j, c in enumerate(numeric)}
-        else:
-            means = {c: None for c in numeric}
-            var_rows = {c: (None, 0) for c in numeric}
+        observed.select(F.lit(1)).count()  # drive the metrics
+    try:
+        g = obs.get
+    except Exception:
+        # an empty train (e.g. filter(lit(False))) optimizes to an
+        # empty LocalRelation and the CollectMetrics node never fires —
+        # degrade to None stats like the old train.agg().first() path
+        g = None
+    n_total = g["cnt"] if g is not None else 0
+    if g is not None:
+        means = {c: g[f"avg{j}"] for j, c in enumerate(numeric)}
+        var_rows = {c: (g[f"var{j}"], g[f"nn{j}"]) for j, c in enumerate(numeric)}
+    else:
+        means = {c: None for c in numeric}
+        var_rows = {c: (None, 0) for c in numeric}
 
     scaler_stats: dict[str, tuple[float, float]] = {}
     for c in numeric:
@@ -675,106 +522,11 @@ def fit_feature_pipeline(
 
     # --- PCA final stage --------------------------------------------------
     if pca_k is not None:
+        from web_attack_detection_spark.ml.pipeline import fit_pca_native
+
         width = m + sum(s - 1 for s in model.cat_sizes.values())
         k = min(pca_k, width)
-        n_full = row_grp["nfull"] if (analytic and row_grp is not None) else 0
-        if analytic and n_full > 1:
-            model.pca_model = _pca_from_fused_stats(
-                model, row_grp, cat_grps, cp_grps, width, k
-            )
-        else:
-            # gramian fallback: explicit request, or degenerate n_full
-            from web_attack_detection_spark.ml.pipeline import fit_pca_native
-
-            assembled = model.transform(train, features_col="__fit_features")
-            model.pca_model = fit_pca_native(
-                assembled, "__fit_features", k, dim=width
-            )
+        assembled = model.transform(train, features_col="__fit_features")
+        model.pca_model = fit_pca_native(assembled, "__fit_features", k, dim=width)
         model.pca_k = k
     return model
-
-
-def _pca_from_fused_stats(
-    model: FeaturePipelineModel, row_grp, cat_grps, cp_grps, width: int, k: int
-):
-    """Assemble Σz and Σzzᵀ of the transform's feature vector from the
-    fused-scan statistics (see fit_feature_pipeline) and eigensolve.
-
-    Axis layout matches the assembly: scaled numerics first, then
-    per-categorical one-hot slots (size-1, drop_last). One-hot algebra
-    does the heavy lifting: 1{c=v}·1{c=w} = 0 for v≠w, 1{c=v}² = 1{c=v},
-    and 1{c=v}·x' reduces to the per-(c,v) conditional numeric sums —
-    no row-level second pass needed anywhere."""
-    import numpy as np
-
-    from web_attack_detection_spark.ml.pipeline import pca_from_moments
-
-    numeric, categorical = model.numeric_cols, model.categorical_cols
-    m = len(numeric)
-    n_full = row_grp["nfull"]
-    mu = [model.means[c] if model.means[c] is not None else 0.0 for c in numeric]
-    f = []
-    for c in numeric:
-        std = model.scaler_stats[c][1]
-        f.append(1.0 / std if std is not None and std > 0.0 else 1.0)
-
-    # slot offsets per categorical (drop_last: idx == size-1 has none)
-    offsets: dict[str, int] = {}
-    pos = m
-    for c in categorical:
-        offsets[c] = pos
-        pos += model.cat_sizes[c] - 1
-    assert pos == width
-
-    s_vec = np.zeros(width)
-    cross = np.zeros((width, width))
-
-    def g(r, name):  # NULL aggregate → 0.0
-        v = r[name]
-        return 0.0 if v is None else float(v)
-
-    # numeric block
-    for j in range(m):
-        nullf_j = n_full - row_grp[f"nnf{j}"]
-        s_vec[j] = f[j] * (g(row_grp, f"sf{j}") + nullf_j * mu[j])
-        cross[j, j] = f[j] * f[j] * (g(row_grp, f"p{j}_{j}") + nullf_j * mu[j] ** 2)
-        for i in range(j):
-            raw = (
-                g(row_grp, f"p{i}_{j}")
-                + mu[i] * g(row_grp, f"a{i}_{j}")
-                + mu[j] * g(row_grp, f"a{j}_{i}")
-                + g(row_grp, f"c{i}_{j}") * mu[i] * mu[j]
-            )
-            cross[i, j] = cross[j, i] = f[i] * f[j] * raw
-
-    # one-hot slots: index each group's value through the fitted mapping
-    slot_of: dict[tuple, int] = {}
-    for c in categorical:
-        widthc = model.cat_sizes[c] - 1
-        for r in cat_grps[c]:
-            idx = int(model.cat_models[c][r["sval"]])
-            if idx >= widthc:  # drop_last category: no slot
-                continue
-            slot = offsets[c] + idx
-            slot_of[(c, r["sval"])] = slot
-            cntf = r["nfull"]
-            s_vec[slot] = cntf
-            cross[slot, slot] = cntf
-            for j in range(m):
-                t = g(r, f"sf{j}")  # Σ x_j over full rows with c=v
-                u = cntf - r[f"nnf{j}"]  # x_j-null full rows with c=v
-                val = f[j] * (t + u * mu[j])
-                cross[slot, j] = cross[j, slot] = val
-
-    # one-hot × one-hot across categorical pairs: joint full counts
-    for r in cp_grps:
-        if r["sval"] is None or r["sval2"] is None:
-            continue
-        ci, cj = r["col"].split("\x1f")
-        si = slot_of.get((ci, r["sval"]))
-        sj = slot_of.get((cj, r["sval2"]))
-        if si is None or sj is None:  # drop_last slot on either side
-            continue
-        cross[si, sj] = cross[sj, si] = r["nfull"]
-
-    return pca_from_moments(n_full, s_vec, cross, k)

@@ -162,9 +162,8 @@ def fit_pca_native(df: DataFrame, array_col: str, k: int, dim: int | None = None
 
 def pca_from_moments(n: int, s, cross, k: int) -> NativePCAModel:
     """Eigensolve from first/second moments: ``s = Σx`` (length d),
-    ``cross = Σ x xᵀ`` (d×d), over n rows. Shared by the Arrow Gramian
-    pass above and the analytic single-scan fit
-    (functions/feature.fit_feature_pipeline) — O(d³) driver work."""
+    ``cross = Σ x xᵀ`` (d×d), over n rows, as summed by the Arrow
+    Gramian pass above — O(d³) driver work."""
     import numpy as np
 
     s = np.asarray(s, dtype=np.float64)
@@ -293,15 +292,4 @@ def per_class_metrics(
             ).otherwise(0.0),
             6,
         ).alias("f1"),
-    )
-
-
-def keras_models_unavailable(*_args, **_kwargs):  # pragma: no cover
-    """M2-M4 (Keras CNN/RNN/LSTM) are out of engine scope — no
-    TensorFlow in this environment; inference integration point is
-    ``pyspark.ml.functions.predict_batch_udf``."""
-    raise NotImplementedError(
-        "Keras CNN/RNN/LSTM (reference models/{cnn,rnn,lstm}_model.py) "
-        "require TensorFlow; use fit_mlp (MLlib) or plug a trained model "
-        "in via predict_batch_udf."
     )

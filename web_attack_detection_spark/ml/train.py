@@ -6,9 +6,9 @@ The reference trains its Conv1D / SimpleRNN / LSTM stacks with Keras
 so rounds 1-3 drew the boundary at "inference in-engine, training
 out-of-engine".  This module removes that boundary: each architecture's
 BACKWARD pass is implemented in numpy (exactly mirroring the forward
-passes in :mod:`ml.nets`), and training runs as the classic Spark
-iterate-with-distributed-gradient loop — the same dataflow MLlib's own
-L-BFGS uses:
+passes in :mod:`ml.nets`).  Full-batch training runs as the classic
+Spark iterate-with-distributed-gradient loop — the same dataflow
+MLlib's own L-BFGS uses:
 
     per epoch:
       broadcast current parameter vector
@@ -25,8 +25,10 @@ executor-cached DataFrame; the shuffle per epoch moves only
 second-stage reduce parallelizes over chunks, so the driver collects
 ``n_chunks`` rows of ``chunk`` doubles each — O(model), independent of
 data volume.  Full-batch gradients keep the loop deterministic (no
-per-worker RNG); minibatch SGD at scale is the same loop over a
-``TABLESAMPLE`` of the cached set.
+per-worker RNG).  The reference's minibatch protocol (Adam, batch 64,
+EarlyStopping) is a serial chain of small updates instead; it runs
+whole inside one ``mapInPandas`` task over the bounded train set
+(:func:`_fit_protocol_fused`).
 
 Dropout layers in the reference (rate 0.3 after each recurrent block,
 0.5 after the CNN dense layer) ARE implemented here: inverted
@@ -699,58 +701,6 @@ def adam_step(
     return flat - lr * m_hat / (np.sqrt(v_hat) + eps), m, v
 
 
-def distributed_loss_eval(
-    df,
-    arch: str,
-    params: dict,
-    seq_col: str = "seq",
-    label_col: str = "label",
-    batch_rows: int = 4096,
-) -> tuple[float, int]:
-    """Forward-only distributed mean cross-entropy: one ``mapInPandas``
-    scan emitting a single ``(loss_sum, n)`` row per partition, summed
-    on the driver (O(partitions) rows — the fit-stats pattern).  This
-    is the per-epoch ``val_loss`` the reference's EarlyStopping
-    monitors (``mlp_model.py:67-71``); forward-only, so it costs about
-    a third of a gradient evaluation and shuffles nothing."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(flatten_params(params))
-    template = params
-    fwd = FORWARD_FNS[arch]
-
-    def part_loss(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = unflatten_params(template, bc.value)
-        loss_acc = 0.0
-        n_acc = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            seqs = np.stack(pdf[seq_col].to_numpy())
-            ys = pdf[label_col].to_numpy().astype(np.int64)
-            for s in range(0, len(ys), batch_rows):
-                probs = fwd(seqs[s : s + batch_rows], p)
-                yb = ys[s : s + batch_rows]
-                loss_acc += -np.log(
-                    np.clip(probs[np.arange(len(yb)), yb], 1e-12, None)
-                ).sum()
-                n_acc += len(yb)
-        if n_acc:
-            yield pd.DataFrame({"loss": [loss_acc], "n": [n_acc]})
-
-    rows = (
-        df.select(seq_col, label_col)
-        .mapInPandas(part_loss, "loss double, n long")
-        .collect()
-    )
-    bc.unpersist()
-    n = sum(r["n"] for r in rows)
-    if n == 0:
-        return 0.0, 0
-    return sum(r["loss"] for r in rows) / n, n
-
-
 # Per-epoch deterministic minibatch shard assignment: a two-round
 # xorshift/wrapping-multiply mixer (murmur-finalizer shape) over
 # (id + epoch*SALT).  The earlier additive-salt form
@@ -760,16 +710,16 @@ def distributed_loss_eval(
 # multiplies and full avalanche after, pair co-residency across
 # epochs matches independent random re-assignment (measured 0.245 ==
 # 2*(1/n)*(1-1/n) for n=7 on sequential ids) — the real Keras
-# ``shuffle=True`` stand-in.  Both multipliers are odd and < 2**31 so
-# every intermediate in the Spark twin fits signed 64-bit (Spark 4
-# runs ANSI mode: arithmetic overflow THROWS; bit-shifts don't check).
+# ``shuffle=True`` stand-in.  Both multipliers are odd, so each
+# wrapping multiply is a bijection on uint64.
 _SHARD_MULT = 1640531527  # 0x61C88647 = -floor(2**32/phi) mod 2**32
-_SHARD_MULT2 = 2027808487  # odd, < 2**31
+_SHARD_MULT2 = 2027808487  # odd
 _SHARD_EPOCH_SALT = 40503
 
 
 def _shard_ids(ids: np.ndarray, epoch: int, n_shards: int) -> np.ndarray:
-    """numpy twin of :func:`_shard_expr` (uint64 wraps natively)."""
+    """Shard of each id for ``epoch`` (uint64 arithmetic wraps
+    natively)."""
     h = ids.astype(np.uint64) + np.uint64(epoch) * np.uint64(_SHARD_EPOCH_SALT)
     h ^= h >> np.uint64(33)
     h *= np.uint64(_SHARD_MULT)
@@ -777,29 +727,6 @@ def _shard_ids(ids: np.ndarray, epoch: int, n_shards: int) -> np.ndarray:
     h *= np.uint64(_SHARD_MULT2)
     h ^= h >> np.uint64(32)
     return ((h >> np.uint64(33)) % np.uint64(n_shards)).astype(np.int64)
-
-
-def _shard_expr(id_col: str, epoch: int, n_shards: int):
-    """Spark twin of :func:`_shard_ids` under ANSI mode (no wrapping
-    multiply available).  ``_wrapmul`` computes (h*K) mod 2**64 via a
-    hi/lo 32-bit split: lo*K < 2**63 and hi*K < 2**63 for K < 2**31,
-    and the two halves are recombined with shift/xor (bit ops are not
-    overflow-checked), so no expression can trip an ANSI error."""
-    from pyspark.sql import functions as F
-
-    m32 = F.lit(0xFFFFFFFF)
-
-    def _wrapmul(h, k: int):
-        lo_k = h.bitwiseAND(m32) * F.lit(k)
-        hi_k = F.shiftrightunsigned(h, 32) * F.lit(k)
-        top = (F.shiftrightunsigned(lo_k, 32) + hi_k).bitwiseAND(m32)
-        return F.shiftleft(top, 32).bitwiseXOR(lo_k.bitwiseAND(m32))
-
-    h = F.col(id_col).cast("long") + F.lit(epoch * _SHARD_EPOCH_SALT)
-    h = _wrapmul(h.bitwiseXOR(F.shiftrightunsigned(h, 33)), _SHARD_MULT)
-    h = _wrapmul(h.bitwiseXOR(F.shiftrightunsigned(h, 29)), _SHARD_MULT2)
-    h = h.bitwiseXOR(F.shiftrightunsigned(h, 32))
-    return F.pmod(F.shiftrightunsigned(h, 33), F.lit(n_shards))
 
 
 def fit_sequence_net(
@@ -820,7 +747,6 @@ def fit_sequence_net(
     id_col: str = "vec_id",
     val_df=None,
     patience: int | None = None,
-    exec_mode: str = "allreduce",
     dropout: float = 0.0,
 ):
     """Train a reference-architecture net in-engine.
@@ -846,15 +772,16 @@ def fit_sequence_net(
       read off the product's high 32 bits, so batch COMPOSITION (not
       just batch order) changes every epoch: the deterministic,
       scale-safe stand-in for Keras ``shuffle=True``; shard sizes are
-      ``batch_size`` in expectation.  Each shard step
-      is one synchronous data-parallel gradient — the same per-batch
-      allreduce dataflow Horovod runs under Keras — followed by a
-      driver-side Adam step.  After each epoch ``val_df`` is scored
-      with a forward-only distributed pass; training stops once
-      ``val_loss`` hasn't improved for ``patience`` epochs and the
-      best-epoch weights are restored (Keras semantics: weights are
-      restored only when the callback actually triggers; a run that
-      reaches the epoch cap keeps its final weights).
+      ``batch_size`` in expectation.  Each shard step is one gradient
+      followed by an Adam step.  After each epoch ``val_df`` is scored
+      with a forward pass; training stops once ``val_loss`` hasn't
+      improved for ``patience`` epochs and the best-epoch weights are
+      restored (Keras semantics: weights are restored only when the
+      callback actually triggers; a run that reaches the epoch cap
+      keeps its final weights).  The whole protocol runs inside one
+      ``mapInPandas`` task with the val split broadcast — see
+      :func:`_fit_protocol_fused` — so ``train_df`` must carry
+      ``id_col``.
 
     When any protocol option is engaged (``optimizer="adam"``,
     ``batch_size``, ``val_df`` or ``patience``), ``history`` is a dict
@@ -862,15 +789,8 @@ def fit_sequence_net(
     "stopped_epoch": int, "early_stopped": bool}`` — the Keras
     ``history.history`` shape plus the EarlyStopping outcome.
 
-    ``exec_mode`` picks how protocol steps execute: ``"allreduce"``
-    runs one synchronous data-parallel gradient per minibatch (the
-    Horovod dataflow — right when batches are large enough to amortize
-    a cluster round-trip), ``"fused"`` runs the whole loop inside one
-    ``mapInPandas`` task with the val split broadcast (right at the
-    reference's batch 64, where a per-step allreduce would cost more
-    scheduling than compute — see :func:`_fit_protocol_fused`).  Both
-    drive the SAME `_protocol_loop`; trajectory parity is asserted in
-    tests/test_train.py.
+    ``dropout`` (inverted, masks seeded per (seed, epoch, step))
+    needs a minibatch fit; a full-batch fit with dropout raises.
 
     ``init`` resumes from a previous parameter dict (e.g. one loaded
     via :func:`load_params` from a checkpoint) instead of seeding
@@ -883,6 +803,10 @@ def fit_sequence_net(
     and early BPTT signal dies."""
     if optimizer not in ("sgd", "adam"):
         raise ValueError(f"unknown optimizer {optimizer!r}")
+    if dropout and batch_size is None:
+        # Reference rates: mlp 0.3 (mlp_model.py:21,23), cnn 0.5
+        # (cnn_model.py:33), rnn/lstm 0.3 ({rnn,lstm}_model.py:21,23).
+        raise ValueError("dropout requires a minibatch fit (batch_size)")
     if init is not None:
         params = init
     else:
@@ -918,138 +842,20 @@ def fit_sequence_net(
         return unflatten_params(params, flat), history
 
     # --- reference protocol path (minibatch + optional early stopping) ---
-    if exec_mode not in ("allreduce", "fused"):
-        raise ValueError(f"unknown exec_mode {exec_mode!r}")
-    if dropout:
-        # dropout masks are drawn inside the single-process protocol
-        # kernel (seeded per epoch/step, reproducible); the
-        # per-partition allreduce gradient has no deterministic
-        # per-row mask, so the honest boundary is dropout => fused.
-        # Reference rates: mlp 0.3 (mlp_model.py:21,23), cnn 0.5
-        # (cnn_model.py:33), rnn/lstm 0.3 ({rnn,lstm}_model.py:21,23).
-        if exec_mode != "fused" or batch_size is None:
-            raise ValueError("dropout requires exec_mode='fused' minibatch")
     n_shards = 1
     if batch_size is not None:
         n_train = train_df.count()
         if n_train == 0:
             raise ValueError("empty training set")
         n_shards = max(1, -(-n_train // batch_size))
-
-    if exec_mode == "fused":
-        flat, history = _fit_protocol_fused(
-            train_df, val_df, arch, flat, params, n_shards,
-            seq_col, label_col, id_col,
-            epochs=epochs, lr=lr, momentum=momentum, clip_norm=clip_norm,
-            optimizer=optimizer, patience=patience,
-            dropout=dropout, seed=seed,
-        )
-        return unflatten_params(params, flat), history
-
-    def grad_eval(epoch, s, f):
-        batch = (
-            train_df
-            if n_shards == 1
-            else train_df.filter(_shard_expr(id_col, epoch, n_shards) == s)
-        )
-        return distributed_loss_grad(
-            batch, arch, unflatten_params(params, f), seq_col, label_col
-        )
-
-    val_eval = None
-    if val_df is not None:
-        def val_eval(f):
-            vl, nv = distributed_loss_eval(
-                val_df, arch, unflatten_params(params, f), seq_col, label_col
-            )
-            if nv == 0:
-                # an empty val scan would otherwise report loss 0.0 and
-                # freeze best weights at epoch 1 — fail loudly instead,
-                # mirroring the empty-training-set guard.
-                raise ValueError("empty validation set")
-            return vl
-
-    flat, history = _protocol_loop(
-        flat, n_shards, grad_eval, val_eval,
+    flat, history = _fit_protocol_fused(
+        train_df, val_df, arch, flat, params, n_shards,
+        seq_col, label_col, id_col,
         epochs=epochs, lr=lr, momentum=momentum, clip_norm=clip_norm,
         optimizer=optimizer, patience=patience,
+        dropout=dropout, seed=seed,
     )
     return unflatten_params(params, flat), history
-
-
-def _protocol_loop(
-    flat: np.ndarray,
-    n_shards: int,
-    grad_eval,
-    val_eval,
-    *,
-    epochs: int,
-    lr: float,
-    momentum: float,
-    clip_norm: float,
-    optimizer: str,
-    patience: int | None,
-):
-    """The reference training protocol's control flow, shared verbatim
-    by the allreduce path (Spark job per step) and the fused path
-    (numpy inside one task): minibatch steps -> optimizer update ->
-    per-epoch val loss -> EarlyStopping(patience, restore-best-on-
-    trigger).  ``grad_eval(epoch, shard, flat) -> (loss, grad, n)``;
-    ``val_eval(flat) -> loss`` or None to disable early stopping."""
-    m = np.zeros_like(flat)
-    v = np.zeros_like(flat)
-    vel = np.zeros_like(flat)
-    t = 0
-    best_val = float("inf")
-    best_epoch = 0
-    best_flat = flat.copy()
-    wait = 0
-    early_stopped = False
-    hist_loss: list[float] = []
-    hist_val: list[float] = []
-    epoch = 0
-    for epoch in range(1, epochs + 1):
-        ep_loss = 0.0
-        ep_n = 0
-        for s in range(n_shards):
-            loss, grad, n = grad_eval(epoch, s, flat)
-            if n == 0:
-                continue  # hash shard happened to be empty
-            ep_loss += loss * n
-            ep_n += n
-            gn = float(np.linalg.norm(grad))
-            if clip_norm and gn > clip_norm:
-                grad = grad * (clip_norm / gn)
-            if optimizer == "adam":
-                t += 1
-                flat, m, v = adam_step(flat, grad, m, v, t, lr=lr)
-            else:
-                vel = momentum * vel - lr * grad
-                flat = flat + vel
-        if ep_n == 0:
-            raise ValueError("empty training set")
-        hist_loss.append(ep_loss / ep_n)
-        if val_eval is not None:
-            vl = val_eval(flat)
-            hist_val.append(vl)
-            if vl < best_val:
-                best_val, best_epoch, best_flat = vl, epoch, flat.copy()
-                wait = 0
-            else:
-                wait += 1
-                if patience is not None and wait >= patience:
-                    early_stopped = True
-                    break
-    if early_stopped:  # Keras restore_best_weights: only on trigger
-        flat = best_flat
-    history = {
-        "loss": hist_loss,
-        "val_loss": hist_val,
-        "best_epoch": best_epoch if val_eval is not None else len(hist_loss),
-        "stopped_epoch": epoch,
-        "early_stopped": early_stopped,
-    }
-    return flat, history
 
 
 def protocol_fit_arrays(
@@ -1073,14 +879,17 @@ def protocol_fit_arrays(
     seed: int = 0,
 ):
     """Single-process reference-protocol fit over in-memory arrays —
-    the compute kernel of the fused exec mode and the local twin the
-    parity tests compare against.  Rows are sorted by id first so the
-    result is independent of arrival order; shard selection uses the
-    same epoch-salted mixer hash as the distributed path.  With
-    ``dropout`` > 0 each step's inverted-dropout mask comes from a
-    generator seeded by (seed, epoch, step), so the whole trajectory
-    is reproducible and restore-best/truncated-refit parity holds
-    exactly as in the no-dropout case."""
+    the compute kernel of :func:`_fit_protocol_fused` and the local
+    twin the parity tests compare against: minibatch steps ->
+    optimizer update -> per-epoch val loss ->
+    EarlyStopping(patience, restore-best-on-trigger).  Rows are sorted
+    by id first so the result is independent of arrival order; each
+    epoch's shards come from the epoch-salted mixer hash
+    (:func:`_shard_ids`).  With ``dropout`` > 0 each step's
+    inverted-dropout mask comes from a generator seeded by (seed,
+    epoch, step), so the whole trajectory is reproducible and
+    restore-best/truncated-refit parity holds exactly as in the
+    no-dropout case.  ``Xv`` None disables early stopping."""
     order = np.argsort(ids, kind="stable")
     X = X[order]
     y = y[order]
@@ -1088,35 +897,73 @@ def protocol_fit_arrays(
     grad_fn = GRAD_FNS[arch]
     fwd = FORWARD_FNS[arch]
 
-    def grad_eval(epoch, s, flat):
-        mask = _shard_ids(ids, epoch, n_shards) == s
-        n = int(mask.sum())
-        if n == 0:
-            return 0.0, None, 0
-        p = unflatten_params(template, flat)
-        if dropout:
-            rng = np.random.default_rng((0x5EED, seed, epoch, s))
-            ls, g = grad_fn(X[mask], y[mask], p, dropout=dropout, rng=rng)
-        else:
-            ls, g = grad_fn(X[mask], y[mask], p)
-        return ls / n, flatten_params(g) / n, n
-
-    val_eval = None
-    if Xv is not None:
-        def val_eval(flat):
+    flat = flat0
+    m = np.zeros_like(flat)
+    v = np.zeros_like(flat)
+    vel = np.zeros_like(flat)
+    t = 0
+    best_val = float("inf")
+    best_epoch = 0
+    best_flat = flat.copy()
+    wait = 0
+    early_stopped = False
+    hist_loss: list[float] = []
+    hist_val: list[float] = []
+    epoch = 0
+    for epoch in range(1, epochs + 1):
+        shard = _shard_ids(ids, epoch, n_shards)
+        ep_loss = 0.0
+        ep_n = 0
+        for s in range(n_shards):
+            mask = shard == s
+            n = int(mask.sum())
+            if n == 0:
+                continue  # hash shard happened to be empty
             p = unflatten_params(template, flat)
-            probs = fwd(Xv, p)
-            return float(
-                -np.log(
-                    np.clip(probs[np.arange(len(yv)), yv], 1e-12, None)
-                ).mean()
+            if dropout:
+                rng = np.random.default_rng((0x5EED, seed, epoch, s))
+                ls, g = grad_fn(X[mask], y[mask], p, dropout=dropout, rng=rng)
+            else:
+                ls, g = grad_fn(X[mask], y[mask], p)
+            loss, grad = ls / n, flatten_params(g) / n
+            ep_loss += loss * n
+            ep_n += n
+            gn = float(np.linalg.norm(grad))
+            if clip_norm and gn > clip_norm:
+                grad = grad * (clip_norm / gn)
+            if optimizer == "adam":
+                t += 1
+                flat, m, v = adam_step(flat, grad, m, v, t, lr=lr)
+            else:
+                vel = momentum * vel - lr * grad
+                flat = flat + vel
+        if ep_n == 0:
+            raise ValueError("empty training set")
+        hist_loss.append(ep_loss / ep_n)
+        if Xv is not None:
+            probs = fwd(Xv, unflatten_params(template, flat))
+            vl = float(
+                -np.log(np.clip(probs[np.arange(len(yv)), yv], 1e-12, None)).mean()
             )
-
-    return _protocol_loop(
-        flat0, n_shards, grad_eval, val_eval,
-        epochs=epochs, lr=lr, momentum=momentum, clip_norm=clip_norm,
-        optimizer=optimizer, patience=patience,
-    )
+            hist_val.append(vl)
+            if vl < best_val:
+                best_val, best_epoch, best_flat = vl, epoch, flat.copy()
+                wait = 0
+            else:
+                wait += 1
+                if patience is not None and wait >= patience:
+                    early_stopped = True
+                    break
+    if early_stopped:  # Keras restore_best_weights: only on trigger
+        flat = best_flat
+    history = {
+        "loss": hist_loss,
+        "val_loss": hist_val,
+        "best_epoch": best_epoch if Xv is not None else len(hist_loss),
+        "stopped_epoch": epoch,
+        "early_stopped": early_stopped,
+    }
+    return flat, history
 
 
 def _fit_protocol_fused(
@@ -1142,9 +989,9 @@ def _fit_protocol_fused(
     """Reference-protocol fit as ONE Spark job.
 
     Small-batch SGD is a serial chain of parameter updates — at batch
-    64 a per-step cluster allreduce moves less data than its own
-    scheduling floor costs (measured ~0.25 s/step local; 100+ steps
-    per fit).  The scale-honest shape is therefore to move the
+    64 a distributed gradient per step (one Spark job each) moves less
+    data than its own scheduling floor costs (measured ~0.25 s/step
+    local; 100+ steps per fit).  The scale-honest shape is therefore to move the
     OPTIMIZER to the data: the (already down-sampled/bounded) train
     relation streams through ``mapInPandas`` into a single task that
     runs the whole minibatch/early-stop loop and emits O(model)
@@ -1153,10 +1000,7 @@ def _fit_protocol_fused(
     the other models of the battery, the rest of the workload).  The
     validation split for EarlyStopping ships as a broadcast — it is
     bounded by the same argument that makes per-epoch validation
-    affordable at all.  For large-batch/full-batch training, where
-    data-parallelism genuinely pays, ``exec_mode='allreduce'`` runs
-    the identical `_protocol_loop` with one distributed gradient per
-    step (bit-parity asserted in tests/test_train.py)."""
+    affordable at all."""
     import pandas as pd
 
     spark = train_df.sparkSession

@@ -10,12 +10,7 @@ tests/test_train.py) and trains under the REFERENCE'S OWN PROTOCOL
 Adam(lr=1e-3, Keras defaults), minibatch 64, up to 50 epochs,
 EarlyStopping(monitor=val_loss, patience=5, restore_best_weights),
 validating on the test split exactly as ``main.py:83,100`` does.
-Each minibatch step is one synchronous data-parallel gradient — a
-cached-scan ``mapInPandas`` over the batch's hash shard produces
-per-partition gradient partials, a chunked reduce sums them
-(shuffling only ``partitions × params`` doubles, never rows), and the
-driver applies the Adam step (the per-batch allreduce dataflow
-Horovod runs under Keras).  Reference architectures:
+Reference architectures:
 ``/root/reference/models/
 cnn_model.py:19-40``, ``rnn_model.py:17-34``, ``lstm_model.py:17-34``;
 the reference's ``StandardScaler``-before-net prep
@@ -33,16 +28,15 @@ the held-out split DISTRIBUTED through ``sequence_scorer`` (the same
 train-in-engine -> score-anywhere with one parameter dict).
 
 Rows-only driver check (trained weights have no SQL twin — SURVEY.md §5
-item 2); the hard assertions (gradient checks, distributed==local
-gradient parity, learnability above the majority baseline) live in
+item 2); the hard assertions (gradient checks, in-task==local-twin
+fit parity, learnability above the majority baseline) live in
 tests/test_train.py.
 
-Execution: batch-64 SGD is a serial chain of updates, so the queries
-run the protocol in FUSED mode — one ``mapInPandas`` job streams the
-(hash-capped) train shard into a single task that runs the whole
-minibatch/early-stop loop with the (bounded) validation sample
-broadcast, emitting O(model) output; per-step allreduce exists as the
-large-batch mode and is trajectory-parity-tested (ml/train.py).
+Execution: batch-64 SGD is a serial chain of updates, so one
+``mapInPandas`` job streams the (hash-capped) train shard into a single
+task that runs the whole minibatch/early-stop loop with the (bounded)
+validation sample broadcast, emitting O(model) output
+(ml/train._fit_protocol_fused).
 
 Cost note (bench): these are among the slowest registry entries —
 the wall is the serial numpy minibatch chain (9-27 epochs x ~6 batch
@@ -168,8 +162,8 @@ def _train_eval(spark: SparkSession, sf_dir: str, arch: str) -> DataFrame:
     std = _standardizer(train)
     tr = (
         train.select("vec_id", std(F.col("seq")).alias("seq"), "label")
-        .repartition(16, "vec_id")  # stable hash partitioning -> the
-        # chunk reduce sums partials in a deterministic partition order
+        .repartition(16, "vec_id")  # spread the standardize pass; the
+        # fit sorts rows by vec_id, so partitioning cannot change it
         .cache()
     )
     n_train = tr.count()
@@ -197,11 +191,6 @@ def _train_eval(spark: SparkSession, sf_dir: str, arch: str) -> DataFrame:
         batch_size=_BATCH,
         val_df=val,
         patience=_PATIENCE,
-        # batch 64 is below the allreduce payoff point (a per-step
-        # cluster round-trip costs more than the 64-row gradient);
-        # the fused mode runs the identical protocol loop inside one
-        # task with O(model) egress — see ml/train._fit_protocol_fused
-        exec_mode="fused",
         # the reference's train-time regularization, architecture-
         # faithful rates: cnn_model.py:33 p=0.5 after Dense(128);
         # rnn/lstm_model.py:21,23 p=0.3 after each recurrent layer
@@ -254,12 +243,12 @@ def ml_cnn_train_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     there with Keras/TF): numpy backprop through
     Conv1D(32/64/128)+pool -> Dense(128) -> softmax, trained under
     the REFERENCE'S protocol (cnn_model.py:74-81): Adam(1e-3),
-    minibatch 64 (per-epoch deterministic hash shards, one synchronous
-    data-parallel gradient per batch), EarlyStopping(val_loss,
-    patience=5, restore-best), <=50 epochs, validating on the test
-    split exactly as main.py:83,100 does.  Gradient correctness is
-    finite-difference-checked; the distributed gradient equals the
-    single-process one to 1e-9 (tests/test_train.py)."""
+    minibatch 64 (per-epoch deterministic hash shards), EarlyStopping(
+    val_loss, patience=5, restore-best), <=50 epochs, validating on the
+    test split exactly as main.py:83,100 does.  The whole protocol runs
+    in one task (ml/train._fit_protocol_fused).  Gradient correctness
+    is finite-difference-checked, and the in-task fit equals its local
+    numpy twin (tests/test_train.py)."""
     return _train_eval(spark, sf_dir, "cnn")
 
 
@@ -507,8 +496,8 @@ def ml_mlp_train_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     softmax, hidden ReLU) trained with Adam(1e-3, Keras defaults),
     minibatch 64, EarlyStopping(val_loss, patience=5, restore-best),
     <=50 epochs, validating on the test split as ``main.py:83`` does —
-    through the same `_protocol_loop`/fused execution the M2-M4
-    trainers use (ml/train.py).  Features come from the fitted feature
+    through the same single-task protocol fit the M2-M4 trainers use
+    (ml/train._fit_protocol_fused).  Features come from the fitted feature
     pipeline (F7), train hash-capped like the other trainers; the
     held-out split is scored DISTRIBUTED via ``sequence_scorer``.
     Dropout(0.3) after the first two hidden layers runs as in the
@@ -568,7 +557,6 @@ def ml_mlp_train_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_size=_BATCH,
         val_df=val,
         patience=_PATIENCE,
-        exec_mode="fused",
         dropout=0.3,  # mlp_model.py:21,23
     )
     tr.unpersist()

@@ -91,17 +91,7 @@ def flagship_pipeline(
     # "materialize the projected train once" step.
     train = train.cache()
     try:
-        # pca_method: both fits are proven equivalent (≤1e-9 on
-        # components, tests/test_ml.py). "gramian" (2 passes over the
-        # CACHED train) measures faster here — the local fixture is
-        # cache/CPU-bound, so the analytic single-pass's O(m²)
-        # aggregate columns cost more than the extra cached pass they
-        # save. On an IO-bound 100 TB scan the choice flips: one pass
-        # of the input beats two, which is why "analytic" is the
-        # library default for narrow numerics (fit_feature_pipeline).
-        model = fit_feature_pipeline(
-            train, label_col="event_type", pca_k=pca_k, pca_method="gramian"
-        )
+        model = fit_feature_pipeline(train, label_col="event_type", pca_k=pca_k)
     finally:
         train.unpersist()
     out = model.transform(events)
