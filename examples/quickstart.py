@@ -50,16 +50,21 @@ def main() -> int:
     print(f"2. detector metrics: AUC = {auc['auc']} over "
           f"{auc['n_pos']}+{auc['n_neg']} events")
 
-    # 3. In-engine deep training (numpy backprop, distributed gradients)
-    from web_attack_detection_spark.ml import nets, train as mltrain
+    # 3. In-engine deep training (numpy backprop, full-batch momentum
+    # SGD in one Spark task)
+    from web_attack_detection_spark.ml import train as mltrain
 
     emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
         F.col("embedding").cast("array<double>").alias("seq"),
         (F.element_at("embedding", 1) > 0).cast("int").alias("label"),
     ).cache()
     emb.count()
     params, hist = mltrain.fit_sequence_net(emb, "rnn", 64, 2, epochs=3, lr=0.2)
-    print(f"3. in-engine RNN training: loss {hist[0]:.3f} -> {hist[-1]:.3f}")
+    print(
+        f"3. in-engine RNN training: loss {hist['loss'][0]:.3f} -> "
+        f"{hist['loss'][-1]:.3f}"
+    )
     with tempfile.NamedTemporaryFile(suffix=".json") as f:
         mltrain.save_params(params, f.name)        # the model.save seam
         _ = mltrain.load_params(f.name)

@@ -5,8 +5,9 @@ The claims under test, strongest first:
    (the gold-standard backprop check);
 2. the backward pass's embedded forward agrees exactly with the
    inference forward in ml/nets.py (no train/score drift);
-3. the DISTRIBUTED full-batch gradient (mapInPandas partials +
-   chunked reduce) equals the single-process gradient;
+3. every fit runs protocol_fit_arrays inside one worker task: a
+   minibatch Adam fit and a full-batch momentum-SGD fit each equal
+   the kernel run locally on the same rows;
 4. training actually learns: loss falls and held-out accuracy beats
    the majority class on separable synthetic data;
 5. the REFERENCE PROTOCOL (round 6): the Adam step matches the
@@ -86,31 +87,6 @@ def test_backward_forward_agrees_with_inference_forward(arch):
     assert abs(loss_sum - ce) < 1e-9
 
 
-def test_distributed_gradient_equals_local(spark):
-    n, L, C = 200, 28, 3  # L >= 28 so the CNN's three pool halvings survive
-    X = RNG.standard_normal((n, L))
-    y = RNG.integers(0, C, n).astype(int)
-    df = (
-        spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
-        )
-        .repartition(6)
-        .cache()
-    )
-    df.count()
-    for arch in ("cnn", "rnn", "lstm"):
-        params = train.init_params(arch, L, C, seed=5)
-        loss_d, grad_d, n_d = train.distributed_loss_grad(
-            df, arch, params, chunk=4096
-        )
-        ls, g = train.GRAD_FNS[arch](X, y, params)
-        assert n_d == n
-        assert abs(loss_d - ls / n) < 1e-9
-        assert np.allclose(grad_d, train.flatten_params(g) / n, atol=1e-9)
-    df.unpersist()
-
-
 def test_fit_learns_separable_classes(spark):
     """Template-injected classes (high margin): every architecture must
     beat the majority baseline decisively and reduce training loss."""
@@ -120,8 +96,8 @@ def test_fit_learns_separable_classes(spark):
     X = templates[y] + 0.3 * RNG.standard_normal((n, L))
     df = (
         spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
+            [(i, X[i].tolist(), int(y[i])) for i in range(n)],
+            "vec_id long, seq array<double>, label int",
         )
         .repartition(6)
         .cache()
@@ -133,7 +109,7 @@ def test_fit_learns_separable_classes(spark):
         )
         probs = train.FORWARD_FNS[arch](X, params)
         acc = (probs.argmax(1) == y).mean()
-        assert hist[-1] < hist[0] * 0.8, (arch, hist)
+        assert hist["loss"][-1] < hist["loss"][0] * 0.8, (arch, hist)
         assert acc > 0.8, (arch, acc)
     df.unpersist()
 
@@ -147,8 +123,8 @@ def test_cnn_fit_learns(spark):
     X = templates[y] + 0.3 * RNG.standard_normal((n, L))
     df = (
         spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
+            [(i, X[i].tolist(), int(y[i])) for i in range(n)],
+            "vec_id long, seq array<double>, label int",
         )
         .repartition(6)
         .cache()
@@ -157,7 +133,7 @@ def test_cnn_fit_learns(spark):
     params, hist = train.fit_sequence_net(df, "cnn", L, C, epochs=8, lr=0.12, seed=4)
     probs = nets.cnn_forward(X, params)
     acc = (probs.argmax(1) == y).mean()
-    assert hist[-1] < hist[0] * 0.8, hist
+    assert hist["loss"][-1] < hist["loss"][0] * 0.8, hist
     assert acc > 0.8, acc
     df.unpersist()
 
@@ -173,8 +149,8 @@ def test_trained_params_flow_through_sequence_scorer(spark):
     X = RNG.standard_normal((n, L))
     y = RNG.integers(0, C, n)
     df = spark.createDataFrame(
-        [(X[i].tolist(), int(y[i])) for i in range(n)],
-        "seq array<double>, label int",
+        [(i, X[i].tolist(), int(y[i])) for i in range(n)],
+        "vec_id long, seq array<double>, label int",
     ).cache()
     df.count()
     params, _ = train.fit_sequence_net(df, "rnn", L, C, epochs=2, lr=0.1, seed=3)
@@ -229,8 +205,8 @@ def test_trained_then_saved_scores_identically(spark, tmp_path):
     X = RNG.standard_normal((n, L))
     y = RNG.integers(0, C, n)
     df = spark.createDataFrame(
-        [(X[i].tolist(), int(y[i])) for i in range(n)],
-        "seq array<double>, label int",
+        [(i, X[i].tolist(), int(y[i])) for i in range(n)],
+        "vec_id long, seq array<double>, label int",
     ).cache()
     df.count()
     params, _ = train.fit_sequence_net(df, "rnn", L, C, epochs=2, lr=0.1, seed=3)
@@ -258,34 +234,6 @@ def test_transpiled_scoring_plan_is_pure_jvm(spark):
     assert plan.lstrip().startswith("*("), plan[:200]
 
 
-def test_driver_and_tree_reduce_identical(spark):
-    """The adaptive reduce must be invisible: both depths produce the
-    SAME floats (sums run in (part_id, chunk_id) order on both)."""
-    n, L, C = 150, 28, 3
-    X = RNG.standard_normal((n, L))
-    y = RNG.integers(0, C, n)
-    df = (
-        spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
-        )
-        .repartition(6)
-        .cache()
-    )
-    df.count()
-    params = train.init_params("cnn", L, C, seed=5)
-    l1, g1, n1 = train.distributed_loss_grad(
-        df, "cnn", params, chunk=4096, reduce_mode="driver"
-    )
-    l2, g2, n2 = train.distributed_loss_grad(
-        df, "cnn", params, chunk=4096, reduce_mode="tree"
-    )
-    assert n1 == n2 == n
-    assert l1 == l2
-    assert np.array_equal(g1, g2)
-    df.unpersist()
-
-
 def test_resume_from_checkpoint_continues_learning(spark, tmp_path):
     """Weights-only checkpoint/resume: save after a few epochs, load in
     a 'new run', keep training — loss keeps falling from where it was."""
@@ -295,8 +243,8 @@ def test_resume_from_checkpoint_continues_learning(spark, tmp_path):
     X = templates[y] + 0.3 * RNG.standard_normal((n, L))
     df = (
         spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
+            [(i, X[i].tolist(), int(y[i])) for i in range(n)],
+            "vec_id long, seq array<double>, label int",
         )
         .repartition(4)
         .cache()
@@ -309,8 +257,8 @@ def test_resume_from_checkpoint_continues_learning(spark, tmp_path):
         df, "rnn", L, C, epochs=3, lr=0.2, init=train.load_params(ckpt)
     )
     # the resumed run starts at the checkpoint's loss, not at init
-    assert h2[0] < h1[0], (h1, h2)
-    assert h2[-1] < h2[0], h2
+    assert h2["loss"][0] < h1["loss"][0], (h1, h2)
+    assert h2["loss"][-1] < h2["loss"][0], h2
     df.unpersist()
 
 
@@ -422,29 +370,6 @@ def test_reference_protocol_matches_local_numpy_twin(spark):
     df.unpersist()
 
 
-def test_distributed_grad_handles_empty_partitions(spark):
-    """Over-partitioned tiny input: empty partitions emit no partials
-    and the gradient is unchanged."""
-    n, L, C = 40, 28, 3
-    X = RNG.standard_normal((n, L))
-    y = RNG.integers(0, C, n)
-    df = (
-        spark.createDataFrame(
-            [(X[i].tolist(), int(y[i])) for i in range(n)],
-            "seq array<double>, label int",
-        )
-        .repartition(63)  # far more partitions than rows
-        .cache()
-    )
-    df.count()
-    params = train.init_params("rnn", L, C, seed=5)
-    loss_d, grad_d, n_d = train.distributed_loss_grad(df, "rnn", params)
-    ls, g = train.GRAD_FNS["rnn"](X, y, params)
-    assert n_d == n
-    assert np.allclose(grad_d, train.flatten_params(g) / n, atol=1e-9)
-    df.unpersist()
-
-
 @pytest.mark.parametrize("arch", ["cnn", "rnn", "lstm"])
 def test_weight_file_serving_bit_identical(spark, tmp_path, arch):
     """End-to-end weight-file SERVING for every sequence architecture
@@ -500,27 +425,20 @@ def test_weight_file_serving_bit_identical(spark, tmp_path, arch):
     df.unpersist()
 
 
-def test_fused_equals_local_twin_bit_exact(spark):
-    """A protocol fit runs protocol_fit_arrays inside a worker task —
-    same code, same rows, same order as calling it locally, so the
-    trajectories must agree to the cross-process BLAS one-ULP class
-    (openblas picks alignment-dependent kernels, so driver and worker
-    processes can differ in the last bit per gemm — the same effect
-    test_weight_file_serving_bit_identical documents)."""
+def _assert_fused_equals_local_twin(spark, batch_size, with_val, **kw):
     df, X, y = _protocol_df(spark)
     ids = np.arange(len(y), dtype=np.int64)
-    kw = dict(
-        epochs=6, lr=0.02, clip_norm=0.0, seed=9, optimizer="adam",
-        batch_size=32, patience=None,
+    p_f, h_f = train.fit_sequence_net(
+        df, "rnn", 16, 3, seed=9, batch_size=batch_size,
+        val_df=df if with_val else None, **kw,
     )
-    p_f, h_f = train.fit_sequence_net(df, "rnn", 16, 3, val_df=df, **kw)
     # local twin on identical rows
     template = train.init_params("rnn", 16, 3, seed=9)
     flat0 = train.flatten_params(template)
-    n_shards = -(-len(y) // 32)
+    n_shards = -(-len(y) // batch_size) if batch_size else 1
+    Xv, yv = (X, y) if with_val else (None, None)
     flat_l, h_l = train.protocol_fit_arrays(
-        X, y, ids, X, y, "rnn", template, flat0, n_shards,
-        epochs=6, lr=0.02, clip_norm=0.0, optimizer="adam", patience=None,
+        X, y, ids, Xv, yv, "rnn", template, flat0, n_shards, **kw
     )
     assert np.allclose(train.flatten_params(p_f), flat_l, atol=5e-6), (
         np.abs(train.flatten_params(p_f) - flat_l).max()
@@ -528,6 +446,28 @@ def test_fused_equals_local_twin_bit_exact(spark):
     assert np.allclose(h_f["loss"], h_l["loss"], atol=1e-7)
     assert np.allclose(h_f["val_loss"], h_l["val_loss"], atol=1e-7)
     df.unpersist()
+
+
+def test_fused_equals_local_twin_bit_exact(spark):
+    """A protocol fit runs protocol_fit_arrays inside a worker task —
+    same code, same rows, same order as calling it locally, so the
+    trajectories must agree to the cross-process BLAS one-ULP class
+    (openblas picks alignment-dependent kernels, so driver and worker
+    processes can differ in the last bit per gemm — the same effect
+    test_weight_file_serving_bit_identical documents)."""
+    _assert_fused_equals_local_twin(
+        spark, 32, True,
+        epochs=6, lr=0.02, clip_norm=0.0, optimizer="adam", patience=None,
+    )
+
+
+def test_fullbatch_sgd_equals_local_twin_bit_exact(spark):
+    """The default full-batch momentum-SGD fit is the same kernel with
+    one shard: one clipped gradient over every row per epoch."""
+    _assert_fused_equals_local_twin(
+        spark, None, False,
+        epochs=6, lr=0.2, clip_norm=5.0, optimizer="sgd", patience=None,
+    )
 
 
 def test_mlp_protocol_query_early_stops(spark):
@@ -656,7 +596,7 @@ def test_dropout_protocol_reproducible_and_restores_best(spark):
 
 def test_dropout_requires_fused_minibatch(spark):
     """Dropout masks are seeded per minibatch step inside the protocol
-    kernel, so a full-batch fit (legacy SGD or full-batch Adam) with
+    kernel, so a full-batch fit (momentum SGD or Adam) with
     dropout must raise rather than silently train without it."""
     df, X, y = _protocol_df(spark)
     for kw in ({}, {"optimizer": "adam", "val_df": df}):

@@ -174,7 +174,7 @@ def main() -> int:
         "",
         "Python nodes appear only at the documented Arrow model boundary",
         "(vectorized gemm projection, `predict_batch_udf` scoring,",
-        "`mapInPandas` gradient partials, multimodal decode stubs).",
+        "`mapInPandas` training tasks, multimodal decode stubs).",
         "",
     ]
     Path(REPO / "PLANS.md").write_text("\n".join(out))

@@ -5,8 +5,8 @@ LSTM stacks — ``/root/reference/models/cnn_model.py:19-40``,
 ``rnn_model.py:17-34``, ``lstm_model.py:17-34``). TensorFlow is not in
 this image; since round 4 that no longer leaves training out-of-engine:
 :mod:`ml.train` implements each architecture's backward pass and trains
-with distributed gradient aggregation (plans/deepq.py). INFERENCE needs
-no TF either: each
+it in one Spark task over a bounded train set (plans/deepq.py).
+INFERENCE needs no TF either: each
 architecture's forward pass is a short sequence of matmuls and
 elementwise ops, implemented here in numpy with seeded deterministic
 weights. Plugged into ``predict_batch_udf`` (ml/inference.py), this

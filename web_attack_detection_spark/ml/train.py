@@ -1,4 +1,4 @@
-"""In-engine distributed training for the reference's sequence models.
+"""In-engine training for the reference's sequence models.
 
 The reference trains its Conv1D / SimpleRNN / LSTM stacks with Keras
 (``/root/reference/models/cnn_model.py:19-40``, ``rnn_model.py:17-34``,
@@ -6,29 +6,19 @@ The reference trains its Conv1D / SimpleRNN / LSTM stacks with Keras
 so rounds 1-3 drew the boundary at "inference in-engine, training
 out-of-engine".  This module removes that boundary: each architecture's
 BACKWARD pass is implemented in numpy (exactly mirroring the forward
-passes in :mod:`ml.nets`).  Full-batch training runs as the classic
-Spark iterate-with-distributed-gradient loop — the same dataflow
-MLlib's own L-BFGS uses:
+passes in :mod:`ml.nets`).  Every fit runs one kernel,
+:func:`protocol_fit_arrays`, inside one ``mapInPandas`` task over the
+train set (:func:`_fit_protocol_fused`): per epoch, hash shards ->
+one gradient per shard -> momentum-SGD or Adam step -> optional
+validation loss and EarlyStopping.  A full-batch fit is the same
+kernel with one shard.
 
-    per epoch:
-      broadcast current parameter vector
-      mapInPandas   -> per-partition gradient PARTIALS (sum over rows),
-                       chunked into fixed-size array slices
-      groupBy(chunk).applyInPandas -> chunk-wise reduce (sorted by
-                       partition id, so the fp sum order is stable)
-      collect the ~dozen chunk rows, reassemble the flat gradient
-      driver applies a momentum-SGD step
-
-Scale notes (100 TB): the train set is scanned once per epoch from an
-executor-cached DataFrame; the shuffle per epoch moves only
-``n_partitions × n_params`` doubles (the partials), never rows; the
-second-stage reduce parallelizes over chunks, so the driver collects
-``n_chunks`` rows of ``chunk`` doubles each — O(model), independent of
-data volume.  Full-batch gradients keep the loop deterministic (no
-per-worker RNG).  The reference's minibatch protocol (Adam, batch 64,
-EarlyStopping) is a serial chain of small updates instead; it runs
-whole inside one ``mapInPandas`` task over the bounded train set
-(:func:`_fit_protocol_fused`).
+Scale: the train set is held in one task, so callers bound it — the
+registered queries hash-cap it (``plans/deepq.py``: ``_MAX_TRAIN`` =
+384 rows for the sequence nets, 1,024 for the MLP), and SCALE.md's
+round-6 probe shows their training cost stays flat as the corpus
+grows.  Data-parallel classifier training at scale is MLlib's job
+(``ml/pipeline.fit_mlp`` and the runner battery).
 
 Dropout layers in the reference (rate 0.3 after each recurrent block,
 0.5 after the CNN dense layer) ARE implemented here: inverted
@@ -49,6 +39,10 @@ from typing import Callable, Iterator
 import numpy as np
 
 from web_attack_detection_spark.ml import nets
+
+# The training frame contract: row id (long, the shard-hash key and
+# the row order inside the kernel), input sequence, int class label.
+ID_COL, SEQ_COL, LABEL_COL = "vec_id", "seq", "label"
 
 # ---------------------------------------------------------------------------
 # canonical parameter <-> flat-vector codec
@@ -533,148 +527,6 @@ def init_params(arch: str, seq_len: int, n_classes: int, seed: int = 42) -> dict
     raise ValueError(f"unknown arch {arch!r}")
 
 
-# ---------------------------------------------------------------------------
-# distributed full-batch gradient (mapInPandas partials -> chunked reduce)
-# ---------------------------------------------------------------------------
-
-_GRAD_CHUNK = 32768
-
-
-def distributed_loss_grad(
-    train_df,
-    arch: str,
-    params: dict,
-    seq_col: str = "seq",
-    label_col: str = "label",
-    batch_rows: int = 4096,
-    chunk: int = _GRAD_CHUNK,
-    reduce_mode: str = "auto",
-):
-    """One distributed gradient evaluation: scan ``train_df`` once,
-    sum per-row gradients inside each partition (numpy, Arrow batches
-    capped at ``batch_rows``), shuffle only chunked partial vectors,
-    reduce per chunk in partition-id order (stable fp sum), and return
-    ``(loss_mean, flat_grad_mean, n_rows)``.
-
-    The per-epoch shuffle volume is ``n_partitions × n_params`` doubles
-    — independent of the number of training rows, which is what makes
-    the loop viable on a 1000-executor cluster.
-    """
-    import pandas as pd
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
-
-    spark = train_df.sparkSession
-    flat = flatten_params(params)
-    template = params
-    bc = spark.sparkContext.broadcast(flat)
-    n_params = flat.size
-    grad_fn = GRAD_FNS[arch]
-
-    # Resolve the reduce depth FIRST: the driver path collects every
-    # partial anyway, so chunking it only multiplies row count — one
-    # chunk per partition minimizes Arrow/py4j round-trip volume.
-    # Chunk boundaries do not change the result: every element is
-    # summed across partitions in part_id order either way (asserted
-    # by test_driver_and_tree_reduce_identical).
-    n_parts = train_df.rdd.getNumPartitions()
-    if reduce_mode == "auto":
-        reduce_mode = "driver" if n_parts <= 64 else "tree"
-    if reduce_mode == "driver":
-        chunk = n_params
-    n_chunks = (n_params + chunk - 1) // chunk
-
-    def part_grads(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = unflatten_params(template, bc.value)
-        g_acc = np.zeros(n_params)
-        loss_acc = 0.0
-        n_acc = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            seqs = np.stack(pdf[seq_col].to_numpy())
-            ys = pdf[label_col].to_numpy().astype(np.int64)
-            for s in range(0, len(ys), batch_rows):
-                ls, g = grad_fn(seqs[s : s + batch_rows], ys[s : s + batch_rows], p)
-                g_acc += flatten_params(g)
-                loss_acc += ls
-                n_acc += len(ys[s : s + batch_rows])
-        if n_acc == 0:
-            return
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame(
-            {
-                "chunk_id": np.arange(n_chunks, dtype=np.int32),
-                "part_id": np.full(n_chunks, pid, dtype=np.int32),
-                "grad": [g_acc[c * chunk : (c + 1) * chunk] for c in range(n_chunks)],
-                "loss": [loss_acc] + [0.0] * (n_chunks - 1),
-                "n": [n_acc] + [0] * (n_chunks - 1),
-            }
-        )
-
-    partial_schema = (
-        "chunk_id int, part_id int, grad array<double>, loss double, n long"
-    )
-    partials = train_df.select(seq_col, label_col).mapInPandas(
-        part_grads, partial_schema
-    )
-
-    # Reduce-side depth choice, same trade MLlib's treeAggregate makes:
-    # with few partitions the chunk shuffle costs more than it saves,
-    # so collect the partials straight to the driver (one stage per
-    # epoch); past the threshold, insert the chunk-parallel shuffle
-    # reduce so the driver only ever sees n_chunks rows.  Both paths
-    # sum in (part_id, chunk_id) order — identical fp results
-    # (asserted in tests/test_train.py).
-    if reduce_mode == "driver":
-        # Arrow collect: the partials are n_parts rows of n_params
-        # doubles — row-pickled py4j collect() measured ~0.3 s/step on
-        # the minibatch path, toPandas() lands them as numpy directly
-        pdf = partials.toPandas()
-        bc.unpersist()
-        if len(pdf) == 0:
-            return 0.0, np.zeros(n_params), 0
-        pdf = pdf.sort_values(["chunk_id", "part_id"])
-        g = np.zeros(n_params)
-        loss = 0.0
-        n = 0
-        for c, arr, ls, nn in zip(
-            pdf["chunk_id"], pdf["grad"], pdf["loss"], pdf["n"]
-        ):
-            a = np.asarray(arr, dtype=np.float64)
-            g[c * chunk : c * chunk + a.size] += a
-            loss += float(ls)
-            n += int(nn)
-        return loss / n, g / n, n
-
-    def reduce_chunk(key, pdf):
-        pdf = pdf.sort_values("part_id")
-        s = np.zeros(len(pdf["grad"].iloc[0]))
-        for g in pdf["grad"]:
-            s += np.asarray(g)
-        return pd.DataFrame(
-            {
-                "chunk_id": [key[0]],
-                "grad": [s],
-                "loss": [float(pdf["loss"].sum())],
-                "n": [int(pdf["n"].sum())],
-            }
-        )
-
-    reduced = partials.groupBy("chunk_id").applyInPandas(
-        reduce_chunk, "chunk_id int, grad array<double>, loss double, n long"
-    )
-    rows = reduced.collect()
-    bc.unpersist()
-    if not rows:
-        return 0.0, np.zeros(n_params), 0
-    rows.sort(key=lambda r: r["chunk_id"])
-    g = np.concatenate([np.asarray(r["grad"]) for r in rows])
-    n = sum(r["n"] for r in rows)
-    loss = sum(r["loss"] for r in rows)
-    return loss / n, g / n, n
-
-
 def adam_step(
     flat: np.ndarray,
     grad: np.ndarray,
@@ -692,8 +544,8 @@ def adam_step(
     optimizer runs with (``mlp_model.py:10-15`` compiles
     ``Adam(learning_rate=0.001)`` and leaves every other argument at
     its Keras default).  Pure numpy, deterministic; returns
-    ``(new_flat, new_m, new_v)`` without mutating inputs — the driver
-    applies it between distributed gradient evaluations."""
+    ``(new_flat, new_m, new_v)`` without mutating inputs — the protocol
+    kernel applies it after each shard gradient."""
     m = beta1 * m + (1.0 - beta1) * grad
     v = beta2 * v + (1.0 - beta2) * grad * grad
     m_hat = m / (1.0 - beta1**t)
@@ -734,8 +586,6 @@ def fit_sequence_net(
     arch: str,
     seq_len: int,
     n_classes: int,
-    seq_col: str = "seq",
-    label_col: str = "label",
     epochs: int = 8,
     lr: float = 0.2,
     momentum: float = 0.9,
@@ -744,21 +594,21 @@ def fit_sequence_net(
     init: dict | None = None,
     optimizer: str = "sgd",
     batch_size: int | None = None,
-    id_col: str = "vec_id",
     val_df=None,
     patience: int | None = None,
     dropout: float = 0.0,
 ):
-    """Train a reference-architecture net in-engine.
+    """Train a reference-architecture net in-engine; returns
+    ``(params, history)``.
 
-    Two training protocols, selected by the new keyword arguments
-    (defaults reproduce the round-4/5 behavior exactly):
+    ``train_df`` carries ``vec_id`` (long), ``seq`` (array<double>) and
+    ``label`` (int); ``val_df`` carries ``seq`` and ``label``.  The
+    whole fit runs in one task (:func:`_fit_protocol_fused`), so the
+    caller bounds the train set (the registered queries hash-cap it).
 
-    * ``optimizer="sgd"``, ``batch_size=None`` (default) —
-      distributed FULL-BATCH momentum SGD, deterministic, used by the
-      bit-parity and checkpoint-resume tests.  Returns
-      ``(params, history)`` with ``history`` a plain list of per-epoch
-      mean training losses (legacy shape).
+    * ``batch_size=None`` (default) — FULL-BATCH: one gradient over
+      the whole train set per epoch.  With ``optimizer="sgd"`` that is
+      deterministic momentum SGD, clipped to ``clip_norm``.
     * ``optimizer="adam"``, ``batch_size=64``, ``val_df=...``,
       ``patience=5``, ``epochs=50``, ``lr=1e-3`` — the REFERENCE's
       training protocol (``/root/reference/models/mlp_model.py:10-15,
@@ -766,28 +616,22 @@ def fit_sequence_net(
       ``lstm_model.py``): Adam(lr=1e-3, Keras defaults), minibatch 64,
       EarlyStopping(monitor=val_loss, patience=5,
       restore_best_weights=True), up to 50 epochs.  Each epoch
-      partitions the cached train set into ``ceil(n/batch_size)``
-      shards by an epoch-salted Fibonacci hash of ``id_col`` — the
-      epoch is mixed in BEFORE the wrapping multiply and the shard is
-      read off the product's high 32 bits, so batch COMPOSITION (not
-      just batch order) changes every epoch: the deterministic,
-      scale-safe stand-in for Keras ``shuffle=True``; shard sizes are
-      ``batch_size`` in expectation.  Each shard step is one gradient
-      followed by an Adam step.  After each epoch ``val_df`` is scored
-      with a forward pass; training stops once ``val_loss`` hasn't
-      improved for ``patience`` epochs and the best-epoch weights are
-      restored (Keras semantics: weights are restored only when the
-      callback actually triggers; a run that reaches the epoch cap
-      keeps its final weights).  The whole protocol runs inside one
-      ``mapInPandas`` task with the val split broadcast — see
-      :func:`_fit_protocol_fused` — so ``train_df`` must carry
-      ``id_col``.
+      partitions the train set into ``ceil(n/batch_size)`` shards by
+      an epoch-salted mixer hash of ``vec_id`` (:func:`_shard_ids`),
+      so batch COMPOSITION (not just batch order) changes every
+      epoch: the deterministic stand-in for Keras ``shuffle=True``;
+      shard sizes are ``batch_size`` in expectation.  Each shard step
+      is one gradient followed by an optimizer step.  After each epoch
+      ``val_df`` is scored with a forward pass; training stops once
+      ``val_loss`` hasn't improved for ``patience`` epochs and the
+      best-epoch weights are restored (Keras semantics: weights are
+      restored only when the callback actually triggers; a run that
+      reaches the epoch cap keeps its final weights).
 
-    When any protocol option is engaged (``optimizer="adam"``,
-    ``batch_size``, ``val_df`` or ``patience``), ``history`` is a dict
-    ``{"loss": [...], "val_loss": [...], "best_epoch": int,
-    "stopped_epoch": int, "early_stopped": bool}`` — the Keras
-    ``history.history`` shape plus the EarlyStopping outcome.
+    ``history`` is the dict ``{"loss": [...], "val_loss": [...],
+    "best_epoch": int, "stopped_epoch": int, "early_stopped": bool}``
+    — the Keras ``history.history`` shape plus the EarlyStopping
+    outcome; ``val_loss`` is empty without ``val_df``.
 
     ``dropout`` (inverted, masks seeded per (seed, epoch, step))
     needs a minibatch fit; a full-batch fit with dropout raises.
@@ -816,32 +660,6 @@ def fit_sequence_net(
                 _, _, b = params[key]
                 units = b.shape[0] // 4
                 b[units : 2 * units] = 1.0
-    flat = flatten_params(params)
-    legacy = (
-        optimizer == "sgd"
-        and batch_size is None
-        and val_df is None
-        and patience is None
-    )
-
-    if legacy:
-        vel = np.zeros_like(flat)
-        history = []
-        for _ in range(epochs):
-            loss, grad, n = distributed_loss_grad(
-                train_df, arch, unflatten_params(params, flat), seq_col, label_col
-            )
-            if n == 0:
-                raise ValueError("empty training set")
-            history.append(loss)
-            gn = float(np.linalg.norm(grad))
-            if clip_norm and gn > clip_norm:  # recurrent nets: bound BPTT spikes
-                grad = grad * (clip_norm / gn)
-            vel = momentum * vel - lr * grad
-            flat = flat + vel
-        return unflatten_params(params, flat), history
-
-    # --- reference protocol path (minibatch + optional early stopping) ---
     n_shards = 1
     if batch_size is not None:
         n_train = train_df.count()
@@ -849,8 +667,7 @@ def fit_sequence_net(
             raise ValueError("empty training set")
         n_shards = max(1, -(-n_train // batch_size))
     flat, history = _fit_protocol_fused(
-        train_df, val_df, arch, flat, params, n_shards,
-        seq_col, label_col, id_col,
+        train_df, val_df, arch, flatten_params(params), params, n_shards,
         epochs=epochs, lr=lr, momentum=momentum, clip_norm=clip_norm,
         optimizer=optimizer, patience=patience,
         dropout=dropout, seed=seed,
@@ -885,7 +702,8 @@ def protocol_fit_arrays(
     EarlyStopping(patience, restore-best-on-trigger).  Rows are sorted
     by id first so the result is independent of arrival order; each
     epoch's shards come from the epoch-salted mixer hash
-    (:func:`_shard_ids`).  With ``dropout`` > 0 each step's
+    (:func:`_shard_ids`); ``n_shards=1`` is one full-batch step per
+    epoch.  With ``dropout`` > 0 each step's
     inverted-dropout mask comes from a generator seeded by (seed,
     epoch, step), so the whole trajectory is reproducible and
     restore-best/truncated-refit parity holds exactly as in the
@@ -973,9 +791,6 @@ def _fit_protocol_fused(
     flat0: np.ndarray,
     template: dict,
     n_shards: int,
-    seq_col: str,
-    label_col: str,
-    id_col: str,
     *,
     epochs: int,
     lr: float,
@@ -986,13 +801,14 @@ def _fit_protocol_fused(
     dropout: float = 0.0,
     seed: int = 0,
 ):
-    """Reference-protocol fit as ONE Spark job.
+    """Every :func:`fit_sequence_net` fit as ONE Spark job (a
+    full-batch fit is ``n_shards=1``).
 
     Small-batch SGD is a serial chain of parameter updates — at batch
     64 a distributed gradient per step (one Spark job each) moves less
     data than its own scheduling floor costs (measured ~0.25 s/step
-    local; 100+ steps per fit).  The scale-honest shape is therefore to move the
-    OPTIMIZER to the data: the (already down-sampled/bounded) train
+    local; 100+ steps per fit).  The scale-honest shape is therefore to
+    move the OPTIMIZER to the data: the (already down-sampled/bounded) train
     relation streams through ``mapInPandas`` into a single task that
     runs the whole minibatch/early-stop loop and emits O(model)
     output — the driver never sees a row, and the cluster's
@@ -1005,11 +821,11 @@ def _fit_protocol_fused(
 
     spark = train_df.sparkSession
     if val_df is not None:
-        vpdf = val_df.select(seq_col, label_col).toPandas()
+        vpdf = val_df.select(SEQ_COL, LABEL_COL).toPandas()
         if len(vpdf) == 0:
             raise ValueError("empty validation set")
-        Xv = np.stack(vpdf[seq_col].to_numpy())
-        yv = vpdf[label_col].to_numpy().astype(np.int64)
+        Xv = np.stack(vpdf[SEQ_COL].to_numpy())
+        yv = vpdf[LABEL_COL].to_numpy().astype(np.int64)
         bc_val = spark.sparkContext.broadcast((Xv, yv))
     else:
         bc_val = None
@@ -1026,9 +842,9 @@ def _fit_protocol_fused(
         if not chunks:
             return
         data = pd.concat(chunks, ignore_index=True)
-        X = np.stack(data[seq_col].to_numpy())
-        y = data[label_col].to_numpy().astype(np.int64)
-        ids = data[id_col].to_numpy().astype(np.int64)
+        X = np.stack(data[SEQ_COL].to_numpy())
+        y = data[LABEL_COL].to_numpy().astype(np.int64)
+        ids = data[ID_COL].to_numpy().astype(np.int64)
         Xv_, yv_ = bc_val.value if bc_val is not None else (None, None)
         flat, hist = protocol_fit_arrays(
             X, y, ids, Xv_, yv_, arch, template, flat0, n_shards, **kw
@@ -1058,7 +874,7 @@ def _fit_protocol_fused(
         )
 
     rows = (
-        train_df.select(id_col, seq_col, label_col)
+        train_df.select(ID_COL, SEQ_COL, LABEL_COL)
         .coalesce(1)
         .mapInPandas(run, "kind string, idx int, vals array<double>")
         .collect()
